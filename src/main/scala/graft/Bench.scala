@@ -1,8 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR,
-  * one JSON line on stdout.
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+
+/** Whole-registry and dev timer over the registered queries on
+  * SPARK_GRAFT_SF_DIR (the repo benchmark is `perfbench/`).
+  *
+  * Usage: runMain graft.Bench [name...]
+  *
+  *  - No names: the full sweep. Every registered query is timed, then
+  *    every non-reference row that ran is re-timed on the 10x smaller
+  *    sibling dataset, then the LifecycleBench walk runs. The full
+  *    per-query artifact goes to SPARK_GRAFT_BENCH_OUT (default
+  *    BENCH_LOCAL.json) and stdout ends with one compact
+  *    `bench_summary` JSON line.
+  *  - Names: only those rows, under the same discipline; `lifecycle`
+  *    names the LifecycleBench walk. Each query row prints the per-job
+  *    profile of its untimed warm-up run, then its median and spread.
   *
   * Measurement discipline: results are materialized through the noop
   * sink (`format("noop")`) — a bare `.count()` lets Catalyst prune every
@@ -44,105 +59,15 @@ object Bench {
     }
   }
 
-  /** The stdout-tail-safe per-query subset: reported individually in
-    * the bench JSON, re-timed by the cross-sf scaling pass, and linted
-    * post-execution (AQE-final plan) by PlanLintSpec.
-    */
-  val headline: Seq[String] = Seq(
-    "q_scan_pruned", "q_join_enrich", "q_surrogate_lookup",
-    "q_agg_pricing_summary", "q_window_topk_per_group", "q_recursive_chain",
-    "q_events_sessionize", "q_dedup_exact", "q_dedup_minhash_lsh",
-    "q_dedup_ngram_jaccard", "q_dedup_embedding", "q_sim_cosine_topk",
-    "q_sim_ann_lsh", "q_ref_fact_sales", "q_ref_mv_top3_month_country",
-    "q_text_quality", "q_text_clean_corpus", "q_write_idempotent",
-    "q_dedup_components", "q_dedup_jaccard_ppjoin", "q_pack_sequences",
-    "q_sim_ann_recall", "q_sim_ann_multiprobe_recall",
-    "q_join_asof", "q_join_asof_epoch",
-    "q_join_range_binned", "q_text_decontaminate_bloom",
-    "q_dedup_incremental", "q_agg_hll_merge", "q_agg_kll_merge",
-    "q_events_retention", "q_window_ntile_deciles", "q_text_source_overlap",
-    "q_events_funnel_stages", "q_join_bucketed", "q_compact_files",
-    "q_agg_heavy_hitters", "q_sample_temperature",
-    "q_text_repeated_ngrams", "q_text_dup_spans", "q_text_entropy",
-    "q_text_lm_perplexity", "q_events_transitions", "q_text_bpe_encode",
-    "q_agg_exact_median", "q_sample_pps_systematic", "q_events_top_paths",
-    "q_pack_bins", "q_multimodal_dedup", "q_text_hash_embed",
-    // r13 blind spot: the heaviest rows were absent from the scaling
-    // subset — exactly how r11's 38.7x flag stayed hidden.
-    // q_ref_mv_delayed_chain_seeded stays q_ref_-excluded from ratios
-    // (it pins the fixture regardless of dir) but its median is now a
-    // tracked headline number.
-    "q_dedup_cluster_pick", "q_text_retrieval_eval", "q_split_leakage_safe",
-    "q_ref_mv_delayed_chain_seeded",
-    // r14 rows: strip is among the slowest rows, so it joins the
-    // scaling subset immediately (the r13 lesson); quartiles and the
-    // PCA projection are cheap but new — tracked from day one.
-    "q_text_strip_dup_spans", "q_agg_exact_quartiles", "q_embed_pca_project",
-    "q_dedup_containment", "q_scan_xml", "q_dedup_containment_sketch",
-    "q_text_dup_spans_incremental", "q_agg_exact_mad", "q_qa_drift_chi2",
-    "q_sim_pq_distortion", "q_text_gopher_rules", "q_text_top_ngram_mass",
-    "q_agg_exact_weighted_median", "q_dedup_minhash_est_eval",
-    "q_text_chunk_hash_embed", "q_agg_robust_outliers",
-    // r14 second wave: tracked from day one
-    "q_sample_dsir", "q_text_quality_calibrated", "q_join_range_window",
-    "q_text_ccnet_buckets", "q_sample_dsir_eval",
-    "q_window_trailing_scalable",
-    // r15 rows: tracked from day one
-    "q_dedup_fuzzy_join", "q_dedup_fuzzy_cluster", "q_graph_pagerank",
-    "q_text_fuzzy_distance", "q_dedup_fuzzy_incremental",
-    "q_graph_pagerank_weighted", "q_graph_pagerank_personalized",
-    "q_dedup_fuzzy_canonical", "q_graph_host_gate",
-    // r16 rows: tracked from day one
-    "q_graph_pagerank_dangling", "q_sim_knn_graph",
-    "q_sim_knn_graph_recall", "q_pack_bestfit", "q_pack_bestfit_waste",
-    "q_scan_excel_many", "q_graph_hits", "q_dedup_knn_mutual",
-    "q_dedup_semantic_incremental",
-    // r17 row: tracked from day one
-    "q_dedup_semantic_incr_probe_eval",
-    // r17 second wave: tracked from day one (kcore/triangles are the
-    // heaviest of the wave — the r13 lesson says they join the scaling
-    // subset immediately)
-    "q_graph_triangles", "q_graph_kcore", "q_graph_lpa",
-    "q_events_gapfill", "q_sim_ann_sq", "q_sim_ann_sq_recall",
-    "q_multimodal_audio_energy", "q_profile_table",
-    "q_agg_correlations",
-    // r18 rows: tracked from day one (core numbers is the new heaviest
-    // graph row — the ladder pays every rung's peel)
-    "q_graph_core_numbers", "q_graph_lpa_modularity",
-    "q_graph_core_gate", "q_graph_lpa_refined",
-    // r19 rows: tracked from day one
-    "q_graph_louvain", "q_multimodal_neardup", "q_multimodal_neardup_recall",
-    "q_multimodal_neardup_canonical",
-    // r20 rows: per-query medians + scaling ratios tracked from birth
-    // (the r19c close-out-coverage lesson)
-    "q_graph_louvain_phases", "q_multimodal_phash_ab",
-    "q_multimodal_neardup_incremental", "q_multimodal_neardup_phash")
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // r21, guide §2.2/§9: let AQE size CACHED plans by bytes too.
-      // Spark's default (false) freezes a cached frame at the raw
-      // shuffle.partitions width, so every re-read of a persisted
-      // edge list / memoized index scans `cpus` near-empty partitions
-      // per round at small scale — and at production scale AQE keeps
-      // the width the bytes demand, so the setting is scale-neutral
-      // (it only ever coalesces what is measurably tiny).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val unknown = args.toSet - "lifecycle" -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"unknown rows: ${unknown.mkString(", ")}")
+    val spark = Session()
 
     def runAt(name: String, dir: String): Unit =
       SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()
-    def run(name: String): Unit = runAt(name, sfDir)
 
     // SPARK_GRAFT_BENCH_RUNS (default 3) = executions per query: one
     // per-query WARM-UP excluded from the stats + the rest timed. r12
@@ -152,27 +77,56 @@ object Bench {
     // per-plan costs.
     val benchRuns = math.max(2,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    // (median, max-min spread, all-runs-succeeded) over the timed runs;
+    // (median, max-min spread, first failure) over the timed runs;
     // q_ref_* memoize the fixture per session, so they get exactly one
-    // run, no warm-up (a warm-up would leave every timed run a cache hit)
-    def timed(name: String, dir: String): (Double, Double, Boolean) = {
-      var ok = true
+    // run, no warm-up (a warm-up would leave every timed run a cache hit).
+    // `profile` prints the per-job profile of the untimed warm-up run.
+    def timed(name: String, dir: String, profile: Boolean = false)
+        : (Double, Double, Option[Throwable]) = {
+      var failure: Option[Throwable] = None
       def one(): Double = {
         val t0 = System.nanoTime()
-        try runAt(name, dir) catch { case _: Throwable => ok = false }
+        try runAt(name, dir) catch { case e: Throwable =>
+          if (failure.isEmpty) failure = Some(e)
+        }
         (System.nanoTime() - t0) / 1e9
       }
-      if (name.startsWith("q_ref_")) return (one(), 0.0, ok)
-      one() // warm-up, excluded
-      if (!ok) return (0.0, 0.0, false) // failed warm-up: timed runs would too
+      if (name.startsWith("q_ref_")) return (one(), 0.0, failure)
+      if (profile) profiled(spark, name)(one()) else one() // warm-up, excluded
+      // failed warm-up: timed runs would too
+      if (failure.nonEmpty) return (0.0, 0.0, failure)
       val ts = (1 until benchRuns).map(_ => one()).sorted
       val med = if (ts.size % 2 == 1) ts(ts.size / 2)
                 else (ts(ts.size / 2 - 1) + ts(ts.size / 2)) / 2
-      (med, ts.last - ts.head, ok)
+      (med, ts.last - ts.head, failure)
     }
+    // Locale-pinned number formatting: the f-interpolator uses the
+    // default locale, which under a comma-decimal JVM would emit
+    // "value":54,588 and break the JSON.
+    def num(v: Double): String =
+      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    val lifecycleWalks =
+      sys.env.getOrElse("SPARK_GRAFT_LIFECYCLE_RUNS", "2").toInt
 
     // Warmup: one join-heavy query, untimed.
-    try run("q_surrogate_lookup") catch { case _: Throwable => () }
+    try runAt("q_surrogate_lookup", sfDir) catch { case _: Throwable => () }
+
+    if (args.nonEmpty) {
+      args.foreach {
+        case "lifecycle" =>
+          val stages = graft.run.LifecycleBench.run(spark, sfDir, lifecycleWalks)
+          println("BENCH lifecycle " +
+            stages.map { case (k, v) => s"$k=${num(v)}" }.mkString(" "))
+        case name =>
+          timed(name, sfDir, profile = true) match {
+            case (med, spr, None) => println(s"BENCH $name med=${num(med)} s " +
+              s"spread=${num(spr)} s runs=${benchRuns - 1}")
+            case (_, _, Some(e)) => println(s"BENCH $name ERROR ${e.getMessage}")
+          }
+      }
+      spark.stop()
+      return
+    }
 
     // Pre-build session-memoized artifacts untimed, same rationale as
     // the warmup: bucketized tables, the corpus dedup indexes, trained
@@ -237,8 +191,8 @@ object Bench {
     prewarm(sfDir, refToo = true)
 
     val stats = SparkEntry.queries.keys.toSeq.sorted.map { name =>
-      val (med, spr, ok) = timed(name, sfDir)
-      (name, med, spr, ok)
+      val (med, spr, failure) = timed(name, sfDir)
+      (name, med, spr, failure.isEmpty)
     }
     // a failing query is NAMED, never timed: its time-to-exception
     // would read as a phantom speedup in round-over-round diffs (the
@@ -253,21 +207,13 @@ object Bench {
     val unstable = stats.collect {
       case (n, med, spr, true) if med >= 0.05 && spr > med => n
     }
-    // Locale-pinned number formatting: the f-interpolator uses the
-    // default locale, which under a comma-decimal JVM would emit
-    // "value":54,588 and break the JSON.
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    // The driver captures only the tail of stdout, so the JSON line must
-    // stay short: report the headline subset per-query (3 dp) while the
-    // headline total still covers every registered query via "value".
-    val byName = results.toMap
     def dict(entries: Seq[(String, Double)]): String =
       entries.map { case (n, v) => s""""$n":${num(v)}""" }.mkString("{", ",", "}")
-    val qs = dict(headline.flatMap(n => byName.get(n).map(n -> _)))
+    def nameArr(ns: Seq[String]): String =
+      ns.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
 
-    // Cross-sf scaling pass: re-time the headline queries on the 10x
+    // Cross-sf scaling pass: re-time every row that ran on the 10x
     // smaller sibling dataset and record per-query time ratios + the
     // super-linear flags. q_ref_* are excluded: they pin the reference
     // fixture regardless of dir AND memoize silver/gold per session, so
@@ -277,7 +223,7 @@ object Bench {
               else None)
       .filter(d => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d)))
     val scaling = smallDir.map { dir =>
-      val scalingNames = headline.filterNot(_.startsWith("q_ref_"))
+      val scalingNames = results.map(_._1).filterNot(_.startsWith("q_ref_"))
       try runAt("q_surrogate_lookup", dir) catch { case _: Throwable => () }
       prewarm(dir, refToo = false)
       // a failed small-sf run is EXCLUDED (and named in "errors"), never
@@ -285,19 +231,17 @@ object Bench {
       // could flag a query that didn't run as super-linear. Medians on
       // both sides so one noisy run can't fabricate a ratio either.
       val attempts = scalingNames.map { name =>
-        val (med, _, ok) = timed(name, dir)
-        (name, med, ok)
+        val (med, _, failure) = timed(name, dir)
+        (name, med, failure.isEmpty)
       }
       val tSmall = attempts.collect { case (n, t, true) => n -> t }.toMap
       val errors = attempts.collect { case (n, _, false) => n }
-      val tBig = scalingNames.flatMap(n => byName.get(n).map(n -> _)).toMap
+      val tBig = results.toMap
       val ratios = scalingNames.flatMap(n =>
         for (s <- tSmall.get(n); b <- tBig.get(n)) yield n -> b / math.max(s, 1e-3))
       val flagged = superLinear(tSmall, tBig, dataRatio = 10.0)
-      def names(ns: Seq[String]) =
-        ns.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
       (s""","scaling":{"small_sf":"$dir","data_ratio":10,"flagged":${
-        names(flagged.keys.toSeq)},"errors":${names(errors)
+        nameArr(flagged.keys.toSeq)},"errors":${nameArr(errors)
       },"ratios":${dict(ratios)}}""", flagged.size, errors.size,
         flagged.keys.toSeq, errors)
     }
@@ -308,8 +252,6 @@ object Bench {
     // the maintenance ops BENCH's query rows never execute. A dead walk
     // is NAMED ("lifecycle_error"), never silently absent, and never
     // timed (the errored-query fabrication rule).
-    val lifecycleWalks =
-      sys.env.getOrElse("SPARK_GRAFT_LIFECYCLE_RUNS", "2").toInt
     val lifecycle: Either[String, Seq[(String, Double)]] =
       if (lifecycleWalks <= 0) Left("disabled")
       else try Right(graft.run.LifecycleBench.run(spark, sfDir, lifecycleWalks))
@@ -334,10 +276,8 @@ object Bench {
             .flatMap(s => for (sm <- small.get(s); bg <- tBig.get(s))
               yield s -> bg / math.max(sm, 1e-3))
           val flagged = superLinear(small, tBig, dataRatio = 10.0)
-          val names = flagged.keys.toSeq.sorted
-            .map("\"" + _ + "\"").mkString("[", ",", "]")
           s""","lifecycle_scaling":{"small_sf":"$dir","data_ratio":10,""" +
-            s""""flagged":$names,"ratios":${dict(ratios)}}"""
+            s""""flagged":${nameArr(flagged.keys.toSeq)},"ratios":${dict(ratios)}}"""
         } catch { case e: Throwable =>
           val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
             .take(200).replaceAll("[\"\\\\\\n\\r\\t]", " ")
@@ -355,49 +295,26 @@ object Bench {
     // "queries" stays name->median (same shape as every prior round);
     // "spread" carries max-min over the runs so a flaky timing is
     // visible as data instead of whipsawing the median across rounds.
-    // The stdout line reports spread only where it is material
-    // (>= 0.25 s — the flaky ones) to stay inside the driver's
-    // stdout-tail capture; the file artifact keeps every entry.
-    val sprByName = spreads.toMap
-    val sprHead = dict(headline.flatMap(n =>
-      sprByName.get(n).filter(_ >= 0.25).map(n -> _)))
-    // stdout stays tail-safe: cap the unstable list (count is the signal);
-    // the file artifact keeps every name.
-    def nameArr(ns: Seq[String]) =
-      ns.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val errJson = nameArr(errored)
-    val unstableHead =
-      s""""n_unstable":${unstable.size},"unstable":${nameArr(unstable.take(12))}"""
-    // The driver keeps only the TAIL of stdout, and the per-query dicts
-    // above can push the leading headline fields ("value", "n_queries",
-    // the flag counts) past the capture window on a wide registry — so
-    // the same scalars are REPEATED as the last keys of the object:
-    // however the line is truncated from the front, the tail block with
-    // total seconds / query count / error + instability + scaling-flag
-    // counts survives. (Duplicate keys are avoided: the tail uses its
-    // own names.)
+    // The per-query dicts can push the leading scalars ("value",
+    // "n_queries", the flag counts) far from the end of the object, so
+    // the same scalars are REPEATED as its last keys. (Duplicate keys
+    // are avoided: the tail uses its own names.)
     val tailJson =
       s""","tail":{"total_s":${num(total)},"tail_n_queries":${results.size
       },"n_errors":${errored.size},"tail_n_unstable":${unstable.size
       },"n_scaling_flagged":${scaling.map(_._2).getOrElse(-1)
       },"n_scaling_errors":${scaling.map(_._3).getOrElse(-1)}}"""
-    val totalJson =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","runs":${benchRuns - 1},"warmup":1,"n_queries":${results.size},"errors":$errJson,$unstableHead,"queries":$qs,"spread":$sprHead$scalingJson$lifecycleJson,"sf":"$sfDir"$tailJson}"""
-    println(totalJson)
-    // Full per-query dict to a file so round-over-round diffs cover every
-    // query, not just the stdout-tail-safe headline subset.
+    // Full per-query dicts to a file so round-over-round diffs cover
+    // every query.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","runs":${benchRuns - 1},"warmup":1,"n_queries":${results.size},"errors":$errJson,"n_unstable":${unstable.size},"unstable":${nameArr(unstable)},"queries":${dict(results)},"spread":${dict(spreads)}$scalingJson$lifecycleJson,"sf":"$sfDir"$tailJson}""".getBytes("UTF-8"))
-    // FINAL line: one COMPLETE compact JSON object, sized to survive the
-    // driver's ~2000-char stdout-tail capture whole (the sbt epilogue
-    // after it costs ~100 chars). The wide line above front-truncates in
-    // that window, leaving the driver's "parsed" field null and the
-    // flagged/unstable rows anonymous — this line carries every scalar,
-    // the NAME lists (capped at 12 per list; the n_* counts stay exact
-    // so a cap is visible, never a silent truncation), and the slowest
-    // per-query medians down to whatever budget the lists leave, so the
-    // artifact is machine-readable regardless of tail width.
+      s"""{"metric":"total","value":${num(total)},"unit":"sec","runs":${benchRuns - 1},"warmup":1,"n_queries":${results.size},"errors":${nameArr(errored)},"n_unstable":${unstable.size},"unstable":${nameArr(unstable)},"queries":${dict(results)},"spread":${dict(spreads)}$scalingJson$lifecycleJson,"sf":"$sfDir"$tailJson}""".getBytes("UTF-8"))
+    // The one stdout line: a COMPLETE compact JSON object, sized to
+    // survive a ~2000-char stdout-tail capture whole (the sbt epilogue
+    // after it costs ~100 chars). It carries every scalar, the NAME
+    // lists (capped at 12 per list; the n_* counts stay exact so a cap
+    // is visible, never a silent truncation), and the slowest
+    // per-query medians down to whatever budget the lists leave.
     def capped(ns: Seq[String]): String = nameArr(ns.sorted.take(12))
     val scalingFlagged = scaling.map(_._4).getOrElse(Nil)
     val scalingErrored = scaling.map(_._5).getOrElse(Nil)
@@ -412,5 +329,64 @@ object Bench {
     }
     println(s"""$head,"slowest":{${slowKept.mkString(",")}}}""")
     spark.stop()
+  }
+
+  /** Runs `run` under a listener and prints one line per Spark job it
+    * started: job wall, stages, tasks, shuffle bytes read and written,
+    * executor run time. Only a row's untimed warm-up runs this way, so
+    * timed runs stay untraced.
+    */
+  private def profiled(spark: SparkSession, name: String)(
+      run: => Double): Double = {
+    final case class Job(id: Int, desc: String, start: Long,
+                         var end: Long = 0L, var stages: Int = 0,
+                         var tasks: Int = 0, var shuffleRead: Long = 0L,
+                         var shuffleWrite: Long = 0L,
+                         var runTimeMs: Long = 0L)
+    val jobs = mutable.ArrayBuffer[Job]()
+    val stageToJob = mutable.HashMap[Int, Job]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.synchronized {
+          val j = Job(e.jobId, Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.description")))
+            .getOrElse(""), e.time)
+          jobs += j
+          e.stageIds.foreach(stageToJob(_) = j)
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        jobs.synchronized(jobs.find(_.id == e.jobId).foreach(_.end = e.time))
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        jobs.synchronized {
+          val s = e.stageInfo
+          stageToJob.get(s.stageId).foreach { j =>
+            j.stages += 1
+            j.tasks += s.numTasks
+            j.shuffleRead += s.taskMetrics.shuffleReadMetrics.totalBytesRead
+            j.shuffleWrite += s.taskMetrics.shuffleWriteMetrics.bytesWritten
+            j.runTimeMs += s.taskMetrics.executorRunTime
+          }
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val wall = try run finally {
+      // the listener bus delivers asynchronously: give the run's last
+      // job end a bounded wait to arrive
+      val deadline = System.nanoTime() + 2000000000L
+      while (jobs.synchronized(jobs.exists(_.end == 0L)) &&
+             System.nanoTime() < deadline) Thread.sleep(10)
+      sc.removeSparkListener(listener)
+    }
+    val snapshot = jobs.synchronized(jobs.toVector)
+    val jobWall = snapshot.map(j => (j.end - j.start) / 1e3).sum
+    println(f"WARMUP $name wall=$wall%.3f s jobs=${snapshot.size}%d " +
+      f"sum(job wall)=$jobWall%.3f s (the gap is driver/planning time)")
+    snapshot.foreach { j =>
+      println(f"  job ${j.id}%4d ${(j.end - j.start) / 1e3}%7.3f s " +
+        f"stages=${j.stages}%2d tasks=${j.tasks}%4d shufR=${j.shuffleRead}%9d " +
+        f"shufW=${j.shuffleWrite}%9d cpuMs=${j.runTimeMs}%6d ${j.desc.take(60)}")
+    }
+    wall
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of one or more registered
   * queries (all of them if no names given) so scan pruning, broadcasts,
   * window group limits and exchange placement can be audited — or, with
@@ -9,8 +7,8 @@ import org.apache.spark.sql.SparkSession
   * queries and print only the violations (the same check PlanLintSpec
   * gates the build on); `--lint-executed` runs the post-execution
   * face instead (materializes each query under the normal AQE session
-  * and lints the runtime-final plan — the PlanLintSpec headline check,
-  * available here for any registered query).
+  * and lints the runtime-final plan — the check PlanLintSpec applies
+  * to every registered query).
   *
   * Usage: runMain graft.PlanAudit [--lint|--lint-executed] [sfDir] [queryName...]
   */
@@ -22,14 +20,7 @@ object PlanAudit {
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (rest.length > 1) rest.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val base = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    base.sparkContext.setLogLevel("ERROR")
+    val base = Session()
     val spark =
       if (lintMode && !executedMode) graft.plans.PlanLint.lintSession(base)
       else base

@@ -78,31 +78,19 @@ object Tables {
     * on the dtype Spark actually read so both encodings work — a
     * regeneration to micros silently broke every events-derived query
     * when this assumed nanos unconditionally.
-    * NOTE the conf is session-global: harness mains (Verify/Bench) set it
-    * at session construction; the set here covers ad-hoc sessions and is
-    * idempotent.
+    *
+    * Session contract, checked and never rewritten here (both confs are
+    * session-global): [[Session]] sets `nanosAsLong`, without which
+    * Spark itself fails loudly on a NANOS column, and the UTC zone the
+    * NTZ->TimestampType cast below needs to preserve instants. A
+    * session in any other zone is refused by name.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // The NTZ->TimestampType cast below is instant-preserving ONLY under
-    // a UTC session zone; self-heal it for ad-hoc sessions the same way
-    // as the nanos conf (harness mains already set both at build time),
-    // so a non-UTC JVM cannot silently shift every events timestamp.
-    // The heal is session-global state: only touch the conf when it
-    // actually differs, and say so LOUDLY — a session that deliberately
-    // ran non-UTC must see that its zone changed, not discover shifted
-    // timestamp rendering downstream.
     // the EFFECTIVE zone (falls back to the JVM default when the conf
-    // was never set) — conf.get with a default would read "" on an
-    // unset UTC JVM and warn about a no-op override
+    // was never set)
     val zone = spark.sessionState.conf.sessionLocalTimeZone
-    if (zone != "UTC") {
-      System.err.println(
-        s"[graft] Tables.events: overriding session timeZone '$zone' -> " +
-          "'UTC' (required for instant-preserving events.ts reads); " +
-          "set it back after the events-derived queries if needed")
-      spark.conf.set("spark.sql.session.timeZone", "UTC")
-    }
+    require(zone == "UTC", s"Tables.events needs session time zone UTC " +
+      s"but the session runs in '$zone'; build it with graft.Session")
     val raw = t(spark, dir, "events")
     raw.schema("ts").dataType match {
       case LongType =>

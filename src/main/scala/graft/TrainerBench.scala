@@ -1,12 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** BPE-trainer cost-curve measurement (merges vs seconds) — the
   * data behind vocabulary-size decisions. The iterative trainer is the
   * one operator whose cost grows with the MERGE COUNT, not the corpus
-  * (each round re-aggregates the distinct-word symbol table), so the
-  * headline bench — which times the frozen-vocab encode path — says
+  * (each round re-aggregates the distinct-word symbol table), so
+  * graft.Bench — which times the frozen-vocab encode path — says
   * nothing about training cost. This main times `BpeTrainer
   * .trainOnCorpus` at a ladder of merge counts on SPARK_GRAFT_SF_DIR
   * and prints one JSON line; results are committed in TRAINER.md.
@@ -14,18 +12,7 @@ import org.apache.spark.sql.SparkSession
 object TrainerBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE sizes cached plans by bytes (scale-neutral; see Bench)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     val docs = Tables.t(spark, sfDir, "documents")
     // warm the word-frequency input (file listing, codegen) untimed
     graft.operators.BpeTrainer.trainOnCorpus(docs, "text", 1)

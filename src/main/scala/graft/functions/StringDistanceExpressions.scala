@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
@@ -117,10 +116,4 @@ case class DamerauLevenshtein(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DamerauLevenshtein =
     copy(left = newLeft, right = newRight)
-}
-
-object StringDistanceFunctions {
-  def damerauLevenshtein(a: Column, b: Column): Column =
-    GraftColumnBridge.column(DamerauLevenshtein(
-      GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
 }

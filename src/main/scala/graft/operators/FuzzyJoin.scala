@@ -3,7 +3,6 @@ package graft.operators
 import graft.plans.Checkpoints.CutOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** Approximate string join (entity resolution / record linkage) under
   * an edit-distance bound, via symmetric-delete blocking:
@@ -172,17 +171,5 @@ object FuzzyJoin {
     all.withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1)
       .drop("__rn")
-  }
-
-  /** Count of distinct candidate strings in the largest variant bucket —
-    * the observability twin of the loud guard, for capacity planning.
-    */
-  def maxBucketSize(df: DataFrame, strCol: String, maxDist: Int): Long = {
-    val v = side(df, strCol, maxDist)
-    val top = v.groupBy(col("__vh"))
-      .agg(countDistinct(col(strCol)).cast(LongType).as("n"))
-      .agg(max(col("n")).as("m"))
-      .collect() // 1-row metadata-plane scalar
-    if (top.isEmpty || top(0).isNullAt(0)) 0L else top(0).getLong(0)
   }
 }

@@ -116,13 +116,14 @@ object PlanLint {
     }
 
   /** A session derived from `base` with the lint's required plan shape:
-    * no AQE wrapper, no codegen wrappers, nanos-parquet readable.
+    * no AQE wrapper, no codegen wrappers. The rest of the conf (nanos
+    * parquet reads included) is the one [[graft.Session]] built `base`
+    * with.
     */
   def lintSession(base: SparkSession): SparkSession = {
     val s = base.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
     s.conf.set("spark.sql.codegen.wholeStage", "false")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     s
   }
 
@@ -139,8 +140,8 @@ object PlanLint {
     * static lint deliberately disables AQE to see clean structure, but
     * that also blinds it to runtime re-plans (a join strategy revised
     * from runtime stats, skew splits, coalesced readers); this pass
-    * closes that gap for the headline queries. Rule 3 stays
-    * static-only: pushdown is fixed at planning time, AQE never
+    * closes that gap for every registered query (PlanLintSpec). Rule 3
+    * stays static-only: pushdown is fixed at planning time, AQE never
     * changes it.
     */
   def lintExecuted(name: String, df: DataFrame): Seq[Violation] = {

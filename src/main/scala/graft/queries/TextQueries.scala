@@ -1043,15 +1043,6 @@ object TextQueries extends QueryPack {
     if (thr > 0 && estRows * estRowBytes <= thr) broadcast(df) else df
   }
 
-  /** Document count sizing shipAuto estimates, memoized per
-    * (session, dir) — an un-memoized count is a job per query
-    * invocation that lands inside bench timings.
-    */
-  private val nDocMemo = new SessionMemo[String, java.lang.Long]()
-  private[graft] def nDocEst(s: SparkSession, dir: String): Long =
-    nDocMemo.get(s, dir)(
-      Long.box(math.max(t(s, dir, "documents").count(), 1L))).longValue()
-
   /** Benchmark decontamination (the pre-training hygiene operator):
     * flag corpus documents whose winnowed fingerprints overlap the
     * evaluation set (doc_id%100==7 stands in for the benchmark) in

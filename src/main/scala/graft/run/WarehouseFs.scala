@@ -70,11 +70,6 @@ object WarehouseFs {
 
   def exists(p: String): Boolean = { val q = new Path(p); fsOf(q).exists(q) }
 
-  def isDir(p: String): Boolean = {
-    val q = new Path(p); val fs = fsOf(q)
-    fs.exists(q) && fs.getFileStatus(q).isDirectory
-  }
-
   /** Children of `p` (empty if `p` is missing). */
   def list(p: String): Seq[FileStatus] = {
     val q = new Path(p); val fs = fsOf(q)

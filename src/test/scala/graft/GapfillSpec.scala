@@ -58,4 +58,13 @@ class GapfillSpec extends AnyFunSuite with SparkTestBase {
     }
     assert(rows.count(_._4) > 0, "fixture must actually have gaps")
   }
+
+  test("events refuses a non-UTC session and leaves its zone unchanged") {
+    val other = spark.newSession()
+    other.conf.set("spark.sql.session.timeZone", "America/New_York")
+    val e = intercept[IllegalArgumentException](graft.Tables.events(other, dir))
+    assert(e.getMessage.contains("America/New_York"), e.getMessage)
+    assert(e.getMessage.contains("graft.Session"), e.getMessage)
+    assert(other.conf.get("spark.sql.session.timeZone") === "America/New_York")
+  }
 }

@@ -1,9 +1,11 @@
 package graft
 
 import graft.plans.PlanLint
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.util.control.NonFatal
 
 /** The whole-library plan gate: every registered query's physical plan
   * passes PlanLint's structural 100x rules (no Cartesian, no unbounded
@@ -17,10 +19,21 @@ class PlanLintSpec extends AnyFunSuite with SparkTestBase {
   private val dir = "/root/testdata/sf0.001"
   private lazy val lintSpark = PlanLint.lintSession(spark)
 
-  test("every registered query passes the plan lint") {
-    val violations = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) => PlanLint.lint(name, fn(lintSpark, dir))
+  /** `lint` over every registered query built on `session`. A query
+    * that fails to build is a named violation, and the lint goes on to
+    * the queries after it.
+    */
+  private def lintRegistry(session: SparkSession)(
+      lint: (String, DataFrame) => Seq[PlanLint.Violation]) =
+    SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      try lint(name, fn(session, dir))
+      catch { case NonFatal(e) =>
+        Seq(PlanLint.Violation(name, "construction", String.valueOf(e.getMessage)))
+      }
     }
+
+  test("every registered query passes the plan lint") {
+    val violations = lintRegistry(lintSpark)(PlanLint.lint)
     assert(violations.isEmpty,
       "plan lint violations:\n" + violations.mkString("\n"))
   }
@@ -106,13 +119,11 @@ class PlanLintSpec extends AnyFunSuite with SparkTestBase {
 
   // ---- post-execution (AQE-final) lint ------------------------------
 
-  test("headline queries pass the lint on the AQE-final executed plan") {
+  test("every registered query passes the lint on the AQE-final executed plan") {
     // the NORMAL session: AQE + codegen on — this is the plan that ran,
     // after any runtime re-optimization the static (AQE-off) gate
     // cannot see
-    val violations = Bench.headline.flatMap { name =>
-      PlanLint.lintExecuted(name, SparkEntry.queries(name)(spark, dir))
-    }
+    val violations = lintRegistry(spark)(PlanLint.lintExecuted)
     assert(violations.isEmpty,
       "runtime plan violations:\n" + violations.mkString("\n"))
   }
@@ -122,16 +133,14 @@ class PlanLintSpec extends AnyFunSuite with SparkTestBase {
     // the default budget (a legal conditioned BNLJ — runtime lint
     // green); the SAME query with broadcasting disabled executes as a
     // CartesianProduct — runtime lint red
-    def joined(s: org.apache.spark.sql.SparkSession) = {
+    def joined(s: SparkSession) = {
       val n = s.read.parquet(s"$dir/nation.parquet")
       val r = s.read.parquet(s"$dir/region.parquet")
       n.join(r, n("n_regionkey") > r("r_regionkey"))
     }
     val ok = spark.newSession()
-    ok.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     assert(PlanLint.lintExecuted("seeded_bnlj_ok", joined(ok)).isEmpty)
     val bad = spark.newSession()
-    bad.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     bad.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val vs = PlanLint.lintExecuted("seeded_runtime_cartesian", joined(bad))
     assert(vs.exists(_.rule == "cartesian"), vs.mkString("\n"))
@@ -141,10 +150,8 @@ class PlanLintSpec extends AnyFunSuite with SparkTestBase {
     // an unpartitioned window over a table: its SinglePartition exchange
     // materializes as a leaf ShuffleQueryStageExec in the runtime plan —
     // only the stage-splicing unwrap can find it
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val bad = s2.read.parquet(s"$dir/lineitem.parquet").withColumn("rn",
-      row_number().over(Window.orderBy(col("l_orderkey"))))
+    val bad = spark.newSession().read.parquet(s"$dir/lineitem.parquet")
+      .withColumn("rn", row_number().over(Window.orderBy(col("l_orderkey"))))
     val vs = PlanLint.lintExecuted("seeded_runtime_window", bad)
     assert(vs.exists(_.rule == "single-partition"), vs.mkString("\n"))
   }

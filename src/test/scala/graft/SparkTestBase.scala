@@ -3,14 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.Suite
 
-/** Shared local session for all suites (getOrCreate → one JVM-wide
-  * session, so suites don't pay repeated startup).
+/** Shared local session for all suites: the mains' [[Session]] at 4
+  * cores (getOrCreate → one JVM-wide session, so suites don't pay
+  * repeated startup).
   */
 trait SparkTestBase { self: Suite =>
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session(4)
 }
