@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * 1-row max aggregate cross-joined back (never a driver collect); the
   * score frame is |V| rows, localCheckpointed per round to keep the
   * loop's lineage flat (reliable checkpoint on a real cluster). The
-  * edge list is persisted once.
+  * edge list is pinned once ([[GraphInput]]).
   */
 object Hits {
 
@@ -40,68 +40,52 @@ object Hits {
     */
   def run(spark: SparkSession, edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = edges.select(col("src"), col("dst")).distinct().persist()
-    try {
-      // one metadata-plane aggregate covers both production guards (the
-      // PageRank.runWeighted discipline): emptiness, and NULL endpoints —
-      // count(col) skips nulls, and a null-src/null-dst edge would
-      // otherwise silently drop from every hub/authority join below,
-      // leaking its mass without a trace
-      // the affected-edge count must count ROWS with any null endpoint
-      // (count(src)/count(dst) alone undercount when src-nulls and
-      // dst-nulls sit on different rows)
-      val b = e.agg(count(lit(1)),
-        count(when(col("src").isNotNull && col("dst").isNotNull, 1)))
-        .head()
-      val total = b.getLong(0)
-      require(total > 0,
-        "Hits: empty graph — no edges to score; land edges before scoring")
-      require(b.getLong(1) == total,
-        s"Hits: ${total - b.getLong(1)} edges " +
-          "carry a NULL endpoint — their hub/authority mass would " +
-          "silently vanish from the score joins; repair the edge feed")
-      val chain = graft.plans.Checkpoints.chain() // reliable-policy file GC
-      // PINNED: every round (and the final join) reads the node spine
-      val nodes = chain.pin(e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct())
-      // Each half-round cuts the UNRESCALED endpoint sums and the max
-      // rides that cut's materialization as an Observation (r21 — the
-      // KCore discipline applied to the rescale): the old shape built a
-      // 1-row max aggregate + crossJoin into every cut plan, i.e. one
-      // extra aggregate subtree and its AQE stage jobs per half-round.
-      // The rescale becomes a LAZY map-only divide by a driver literal
-      // over the materialized frame — same integer arithmetic, zero
-      // extra jobs (consumers re-run only the cheap projection).
-      def cutSummed(raw: DataFrame): DataFrame = {
-        val obs = org.apache.spark.sql.Observation()
-        val cut = chain.cut(nodes.select(col("node"))
-          .join(raw, Seq("node"), "left")
-          .select(col("node"), coalesce(col("s"), lit(0L)).as("s"))
-          .observe(obs, max(col("s")).as("m")))
-        val d = obs.get("m").asInstanceOf[Long] / 1000L + 1L
-        cut.select(col("node"), expr(s"s div ${d}L").as("s"))
-      }
-      // Deliberately one materialization per half-round (not the
-      // fixed-iteration CutStride): the next half-round's join + the
-      // rescale max both read the score frame, so an un-cut chain
-      // doubles the plan and schedules duplicate AQE stage jobs —
-      // measured 71 -> 85 jobs and 2.7 -> 3.2 s on the registered row
-      // when this loop tried the one-cut form.
-      var hubs = nodes.select(col("node"), lit(1000L).as("s"))
-      var auths: DataFrame = null
-      (1 to iters).foreach { _ =>
-        val aRaw = e.join(hubs, e("src") === hubs("node"))
-          .groupBy(e("dst").as("node")).agg(sum(col("s")).as("s"))
-        auths = cutSummed(aRaw)
-        val hRaw = e.join(auths, e("dst") === auths("node"))
-          .groupBy(e("src").as("node")).agg(sum(col("s")).as("s"))
-        hubs = cutSummed(hRaw)
-      }
-      // the final join reads the last TWO window cuts (hubs, auths) —
-      // exactly the keep=2 window; seal reclaims them under reliable
-      chain.sealIfReliable(nodes.select(col("node"))
-        .join(hubs.select(col("node"), col("s").as("hub_scaled")), "node")
-        .join(auths.select(col("node"), col("s").as("auth_scaled")), "node"))
-    } finally e.unpersist()
+    val chain = graft.plans.Checkpoints.chain() // reliable-policy file GC
+    // the directed distinct edge list, pinned: every round reads it
+    val e = GraphInput.directed(chain, edges, "Hits",
+      "an empty graph has no edges to score; land edges before scoring",
+      "their hub/authority mass would silently vanish from the score " +
+        "joins").edges
+    // PINNED: every round (and the final join) reads the node spine
+    val nodes = chain.pin(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
+    // Each half-round cuts the UNRESCALED endpoint sums and the max
+    // rides that cut's materialization as an Observation (r21 — the
+    // KCore discipline applied to the rescale): the old shape built a
+    // 1-row max aggregate + crossJoin into every cut plan, i.e. one
+    // extra aggregate subtree and its AQE stage jobs per half-round.
+    // The rescale becomes a LAZY map-only divide by a driver literal
+    // over the materialized frame — same integer arithmetic, zero
+    // extra jobs (consumers re-run only the cheap projection).
+    def cutSummed(raw: DataFrame): DataFrame = {
+      val obs = org.apache.spark.sql.Observation()
+      val cut = chain.cut(nodes.select(col("node"))
+        .join(raw, Seq("node"), "left")
+        .select(col("node"), coalesce(col("s"), lit(0L)).as("s"))
+        .observe(obs, max(col("s")).as("m")))
+      val d = obs.get("m").asInstanceOf[Long] / 1000L + 1L
+      cut.select(col("node"), expr(s"s div ${d}L").as("s"))
+    }
+    // Deliberately one materialization per half-round (not the
+    // fixed-iteration CutStride): the next half-round's join + the
+    // rescale max both read the score frame, so an un-cut chain
+    // doubles the plan and schedules duplicate AQE stage jobs —
+    // measured 71 -> 85 jobs and 2.7 -> 3.2 s on the registered row
+    // when this loop tried the one-cut form.
+    var hubs = nodes.select(col("node"), lit(1000L).as("s"))
+    var auths: DataFrame = null
+    (1 to iters).foreach { _ =>
+      val aRaw = e.join(hubs, e("src") === hubs("node"))
+        .groupBy(e("dst").as("node")).agg(sum(col("s")).as("s"))
+      auths = cutSummed(aRaw)
+      val hRaw = e.join(auths, e("dst") === auths("node"))
+        .groupBy(e("src").as("node")).agg(sum(col("s")).as("s"))
+      hubs = cutSummed(hRaw)
+    }
+    // the final join reads the last TWO window cuts (hubs, auths) —
+    // exactly the keep=2 window; seal reclaims them under reliable
+    chain.sealIfReliable(nodes.select(col("node"))
+      .join(hubs.select(col("node"), col("s").as("hub_scaled")), "node")
+      .join(auths.select(col("node"), col("s").as("auth_scaled")), "node"))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** PPJoin-style LOSSLESS prefix-filtered Jaccard self-join over a
   * (doc_id, s) shingle table: a pair with J >= t must share a shingle
@@ -60,7 +61,12 @@ object JaccardPrefixJoin {
                    maxCandidatePairs: Long = DefaultMaxCandidatePairs)
   : DataFrame = {
     val t = num.toDouble / den
-    val cached = sh.persist()
+    // released once the docSets cut below has materialized — nothing
+    // returned reads it. A caller's own cache entry for the same plan
+    // (the CacheManager keys entries by plan) is not ours to drop.
+    val owned = sh.storageLevel == StorageLevel.NONE
+    val cached = if (owned) sh.persist() else sh
+    def release(): Unit = if (owned) cached.unpersist()
     val sizes = cached.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(orderHash(col("s")), col("s"))
@@ -105,7 +111,7 @@ object JaccardPrefixJoin {
       .head()
     val est = if (estRow.isNullAt(0)) 0L else estRow.getLong(0)
     if (est > maxCandidatePairs) {
-      cached.unpersist()
+      release()
       throw new IllegalArgumentException(
         s"JaccardPrefixJoin: the prefix-token histogram implies ~$est " +
           s"candidate pairs (> $maxCandidatePairs) — the lossless pair " +
@@ -138,11 +144,11 @@ object JaccardPrefixJoin {
     // the rename above the exchange specializes each subtree, so
     // exchange reuse never deduped them (profiled: two identical
     // single-task collect_list jobs per run). One lineage cut, two
-    // block reads; the operator already persists the same bytes in
-    // `cached`, so the residency posture is unchanged.
+    // block reads; it is the last reader of `cached`.
     val docSets = graft.plans.Checkpoints.cut(
       cached.groupBy(col("doc_id"))
         .agg(collect_list(col("s")).as("arr")))
+    release()
     cand
       .join(docSets.select(col("doc_id").as("doc_a"),
         col("arr").as("arr_a")), "doc_a")

@@ -20,10 +20,9 @@ import org.apache.spark.sql.functions._
   * the frame into keepers/removed by plain filters over the previous
   * round's materialization, counts each keeper's removed neighbors
   * (the r20 delta peel), and subtracts. While the alive set is at most
-  * `spark.graft.kcore.deltaMaxAlive` rows (default 1M — size the conf
-  * to what one executor comfortably holds as a broadcast), the removed
-  * wave and its decrement counts BROADCAST, so a round is two map-only
-  * passes over the cached edge list plus one wave-sized aggregate —
+  * [[DeltaMaxAlive]] rows, the removed wave and its decrement counts
+  * BROADCAST, so a round is two map-only passes over the pinned edge
+  * list plus one wave-sized aggregate —
   * the optimization guide's §2.3 "shuffle keys and metadata instead of
   * payloads": no |E|-sized exchange per round at all, where the r19
   * shape paid two edge-list semi-join shuffles plus a full endpoint
@@ -33,7 +32,7 @@ import org.apache.spark.sql.functions._
   * early big-wave rounds amortize; the long cascade tail (many rounds,
   * tiny waves — the expensive regime) always runs the delta branch.
   * Both branches produce the same frame (KCoreSpec proves result
-  * equality with the threshold forced to 0). Round count is the
+  * equality with the bound passed as 0). Round count is the
   * longest peel cascade (the graph's degeneracy ordering depth), not
   * |V|; production graphs converge in tens of rounds. The survivor
   * frame is localCheckpointed per round to keep the loop's lineage
@@ -52,14 +51,10 @@ object KCore {
     * removed wave and its decrement counts (both ⊆ the alive set, so
     * both bounded by it) ship as broadcasts and the round never
     * exchanges the edge list; above it the round falls back to the
-    * full degree recompute. Conf `spark.graft.kcore.deltaMaxAlive`;
-    * the default (1M rows ≈ tens of MB framed) is a conservative
-    * executor-broadcast budget — raise it on clusters with roomy
-    * executors to pull more of the cascade into the map-only regime.
+    * full degree recompute. 1M rows (≈ tens of MB framed) is a
+    * conservative executor-broadcast budget.
     */
-  private def deltaMaxAlive(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.kcore.deltaMaxAlive")
-      .map(_.toLong).getOrElse(1000000L)
+  private val DeltaMaxAlive = 1000000L
 
   /** Degrees among `alive`, recomputed from the edge list — the
     * fallback branch for waves too big to broadcast. Nodes whose every
@@ -81,26 +76,23 @@ object KCore {
   /** One delta peel round over a frame of (node, deg-among-frame):
     * keepers (rows passing `keep`) minus each keeper's removed-
     * neighbor count. While the alive set fits the broadcast budget the
-    * round is two map-only passes over the cached edge list plus one
+    * round is two map-only passes over the pinned edge list plus one
     * wave-sized aggregate — no |E| exchange (guide §2.3/§2.4: decide
     * with the metadata, never move the edges); the same broadcast
     * subplan serves both endpoint joins, so the build runs once.
     */
   private def deltaRound(canon: DataFrame, frame: DataFrame,
                          keep: org.apache.spark.sql.Column,
-                         aliveN: Long): DataFrame = {
+                         aliveN: Long, deltaMaxAlive: Long): DataFrame = {
     val keepers = frame.where(keep)
-    if (aliveN <= deltaMaxAlive(frame)) {
-      val removed = broadcast(frame.where(!keep).select(col("node")))
+    if (aliveN <= deltaMaxAlive) {
+      val removed = broadcast(frame.where(!keep).select(col("node").as("nbr")))
       // ONE join below the direction union (not one per direction):
-      // the adjacency is a lazy map-only derivation over the cached
+      // the adjacency is a lazy map-only derivation over the pinned
       // canon, so the round builds a single removed broadcast and the
       // matched-edge aggregate is the only exchange
-      val dec = canon.select(col("u").as("n"), col("v").as("nbr"))
-        .unionAll(canon.select(col("v").as("n"), col("u").as("nbr")))
-        .join(removed, col("nbr") === col("node"))
-        .groupBy(col("n")).agg(count(lit(1)).as("dec"))
-        .select(col("n").as("node"), col("dec"))
+      val dec = GraphInput.adjacency(canon).join(removed, "nbr")
+        .groupBy(col("node")).agg(count(lit(1)).as("dec"))
       keepers.join(broadcast(dec), Seq("node"), "left")
         .select(col("node"),
           (col("deg") - coalesce(col("dec"), lit(0L))).as("deg"))
@@ -134,73 +126,66 @@ object KCore {
     * @return (node, deg_full, deg_core) — one row per k-core member
     */
   def peel(spark: SparkSession, edges: DataFrame, k: Int,
-           maxRounds: Int): DataFrame = {
+           maxRounds: Int): DataFrame =
+    peel(spark, edges, k, maxRounds, DeltaMaxAlive)
+
+  /** [[peel]] with the broadcast-round bound as a parameter (KCoreSpec
+    * passes 0 to force the full-recompute branch).
+    */
+  private[graft] def peel(spark: SparkSession, edges: DataFrame, k: Int,
+                          maxRounds: Int, deltaMaxAlive: Long): DataFrame = {
     require(k >= 1, s"KCore: k must be >= 1, got $k")
     require(maxRounds >= 1, s"KCore: maxRounds must be >= 1, got $maxRounds")
-    val raw = edges.select(col("src"), col("dst"))
-    val g = raw.agg(count(lit(1)),
-      count(when(col("src").isNotNull && col("dst").isNotNull, 1))).head()
-    require(g.getLong(0) > 0,
-      "KCore: empty edge frame — land edges before peeling")
-    require(g.getLong(1) == g.getLong(0),
-      s"KCore: ${g.getLong(0) - g.getLong(1)} edges carry a NULL " +
-        "endpoint — a null edge silently deflates its partner's degree " +
-        "and over-peels; repair the edge feed")
-    val canon = raw
-      .where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-      .persist()
     val chain = graft.plans.Checkpoints.chain() // reliable-policy file GC
-    try {
-      // full-graph degrees need no aliveness filter — one direct
-      // aggregate over the canonical edge endpoints. PINNED: the final
-      // join reads it after the last peel round. The initial node count
-      // AND the first wave's size ride the pin's materialization (one
-      // action, not two).
-      val obs0 = org.apache.spark.sql.Observation()
-      val degFull = chain.pin(canon.select(col("u").as("node"))
-        .unionAll(canon.select(col("v").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-        .observe(obs0, count(lit(1)).as("n"),
-          count(when(col("deg") < k, 1)).as("n_below")))
-      // delta peel (see the scale notes): the frame always holds
-      // (node, deg among the frame's own node set); a round filters it
-      // into keepers/removed and SUBTRACTS each keeper's removed-
-      // neighbor count instead of recomputing degrees from the edge
-      // list. The next wave's size rides each cut's Observation, so
-      // convergence (nothing below k) is known without an extra action
-      // — and without the old confirming round.
-      var survivors = degFull
-      var aliveN = obs0.get("n").asInstanceOf[Long]
-      var belowN = obs0.get("n_below").asInstanceOf[Long]
-      var round = 0
-      while (aliveN != 0L && belowN != 0L) {
-        round += 1
-        require(round <= maxRounds,
-          s"KCore: no fixpoint after $maxRounds peel rounds " +
-            s"($aliveN nodes still alive) — a capped result would be a " +
-            "SUPERSET of the k-core; raise maxRounds for this cascade")
-        // one job per round: the survivor count rides the checkpoint
-        // materialization as an Observation instead of a second action
-        val obs = org.apache.spark.sql.Observation()
-        val next = chain.cut(
-          deltaRound(canon, survivors, col("deg") >= k, aliveN)
-            .observe(obs, count(lit(1)).as("n"),
-              count(when(col("deg") < k, 1)).as("n_below")))
-        aliveN = obs.get("n").asInstanceOf[Long]
-        belowN = obs.get("n_below").asInstanceOf[Long]
-        survivors = next
-      }
-      // seal: the final cut this loop always had, now also reclaiming
-      // every round's checkpoint files under the reliable policy
-      chain.seal(
-        survivors.select(col("node"), col("deg").as("deg_core"))
-          .join(degFull.select(col("node"), col("deg").as("deg_full")),
-            "node")
-          .select(col("node"), col("deg_full"), col("deg_core")))
-    } finally canon.unpersist()
+    val canon = GraphInput.undirected(chain, edges, "KCore",
+      "land edges before peeling",
+      "a null edge silently deflates its partner's degree and over-peels")
+      .edges
+    // full-graph degrees need no aliveness filter — one direct
+    // aggregate over the canonical edge endpoints. PINNED: the final
+    // join reads it after the last peel round. The initial node count
+    // AND the first wave's size ride the pin's materialization (one
+    // action, not two).
+    val obs0 = org.apache.spark.sql.Observation()
+    val degFull = chain.pin(GraphInput.degrees(canon)
+      .observe(obs0, count(lit(1)).as("n"),
+        count(when(col("deg") < k, 1)).as("n_below")))
+    // delta peel (see the scale notes): the frame always holds
+    // (node, deg among the frame's own node set); a round filters it
+    // into keepers/removed and SUBTRACTS each keeper's removed-
+    // neighbor count instead of recomputing degrees from the edge
+    // list. The next wave's size rides each cut's Observation, so
+    // convergence (nothing below k) is known without an extra action
+    // — and without the old confirming round.
+    var survivors = degFull
+    var aliveN = obs0.get("n").asInstanceOf[Long]
+    var belowN = obs0.get("n_below").asInstanceOf[Long]
+    var round = 0
+    while (aliveN != 0L && belowN != 0L) {
+      round += 1
+      require(round <= maxRounds,
+        s"KCore: no fixpoint after $maxRounds peel rounds " +
+          s"($aliveN nodes still alive) — a capped result would be a " +
+          "SUPERSET of the k-core; raise maxRounds for this cascade")
+      // one job per round: the survivor count rides the checkpoint
+      // materialization as an Observation instead of a second action
+      val obs = org.apache.spark.sql.Observation()
+      val next = chain.cut(
+        deltaRound(canon, survivors, col("deg") >= k, aliveN,
+          deltaMaxAlive)
+          .observe(obs, count(lit(1)).as("n"),
+            count(when(col("deg") < k, 1)).as("n_below")))
+      aliveN = obs.get("n").asInstanceOf[Long]
+      belowN = obs.get("n_below").asInstanceOf[Long]
+      survivors = next
+    }
+    // seal: the final cut this loop always had, now also reclaiming
+    // every round's checkpoint files under the reliable policy
+    chain.seal(
+      survivors.select(col("node"), col("deg").as("deg_core"))
+        .join(degFull.select(col("node"), col("deg").as("deg_full")),
+          "node")
+        .select(col("node"), col("deg_full"), col("deg_core")))
   }
 
   /** FULL core decomposition — every node's maximal k (the production
@@ -232,105 +217,98 @@ object KCore {
     * @return (node, core) — one row per node with ≥ 1 edge; core >= 1
     */
   def coreNumbers(spark: SparkSession, edges: DataFrame,
-                  maxRounds: Int): DataFrame = {
+                  maxRounds: Int): DataFrame =
+    coreNumbers(spark, edges, maxRounds, DeltaMaxAlive)
+
+  /** [[coreNumbers]] with the broadcast-round bound as a parameter. */
+  private[graft] def coreNumbers(spark: SparkSession, edges: DataFrame,
+                                 maxRounds: Int,
+                                 deltaMaxAlive: Long): DataFrame = {
     require(maxRounds >= 1,
       s"KCore: maxRounds must be >= 1, got $maxRounds")
-    val raw = edges.select(col("src"), col("dst"))
-    val g = raw.agg(count(lit(1)),
-      count(when(col("src").isNotNull && col("dst").isNotNull, 1))).head()
-    require(g.getLong(0) > 0,
-      "KCore: empty edge frame — land edges before decomposing")
-    require(g.getLong(1) == g.getLong(0),
-      s"KCore: ${g.getLong(0) - g.getLong(1)} edges carry a NULL " +
-        "endpoint — a null edge silently deflates its partner's degree " +
-        "and mislabels core numbers; repair the edge feed")
-    val canon = raw
-      .where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-      .persist()
     val chain = graft.plans.Checkpoints.chain() // reliable-policy file GC
-    try {
-      // the delta-peel frame (node, deg-among-frame - see [[peel]]'s
-      // scale notes): the ladder starts from the full degree frame
-      // directly (the old shape cut a node-only frame and paid a full
-      // degree recompute in round 1), and every round's node count AND
-      // min degree ride the cut's Observation.
-      val obs0 = org.apache.spark.sql.Observation()
-      var frame = chain.cut(canon.select(col("u").as("node"))
-        .unionAll(canon.select(col("v").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-        .observe(obs0, count(lit(1)).as("n"), min(col("deg")).as("mind")))
-      def obsLong(obs: org.apache.spark.sql.Observation,
-                  key: String): Long = obs.get(key) match {
-        case null => 0L // min over an empty final frame observes NULL
-        case v => v.asInstanceOf[Long]
+    val canon = GraphInput.undirected(chain, edges, "KCore",
+      "land edges before decomposing",
+      "a null edge silently deflates its partner's degree and " +
+        "mislabels core numbers").edges
+    // the delta-peel frame (node, deg-among-frame - see [[peel]]'s
+    // scale notes): the ladder starts from the full degree frame
+    // directly (the old shape cut a node-only frame and paid a full
+    // degree recompute in round 1), and every round's node count AND
+    // min degree ride the cut's Observation.
+    val obs0 = org.apache.spark.sql.Observation()
+    var frame = chain.cut(GraphInput.degrees(canon)
+      .observe(obs0, count(lit(1)).as("n"), min(col("deg")).as("mind")))
+    def obsLong(obs: org.apache.spark.sql.Observation,
+                key: String): Long = obs.get(key) match {
+      case null => 0L // min over an empty final frame observes NULL
+      case v => v.asInstanceOf[Long]
+    }
+    var nSurv = obsLong(obs0, "n")
+    var mind = obsLong(obs0, "mind")
+    var k = 1
+    var round = 0
+    val assigned = Vector.newBuilder[DataFrame]
+    while (nSurv > 0L) {
+      round += 1
+      require(round <= maxRounds,
+        s"KCore: core decomposition not finished after $maxRounds " +
+          s"rounds ($nSurv nodes unassigned at k=$k) - a capped run " +
+          "would mislabel every unassigned node's core; raise " +
+          "maxRounds for this cascade")
+      val obs = org.apache.spark.sql.Observation()
+      if (mind >= k) {
+        // nothing below k: the survivor set IS the k-core - and the
+        // k'-core for every k' up to its min degree d, so the
+        // intermediate thresholds are provably empty rungs and
+        // climbing them one at a time would burn one full round each
+        // (on a clique that is the whole ladder). Jump to d+1 AND
+        // execute that rung's first peel sub-round straight off the
+        // ALREADY-MATERIALIZED degree frame: the deg==d support
+        // level leaves with core d.
+        // a plain filter over the ALREADY-CUT frame: lazy locally
+        // (zero-recompute read of the round's checkpoint blocks —
+        // the eager pin was one extra action per rung), pinned under
+        // the reliable policy (the window deletes the frame's files
+        // two cuts later while the final union still reads the view)
+        assigned += chain.pinIfReliable(frame.where(col("deg") === mind)
+          .select(col("node"), lit(mind).as("core")))
+        frame = chain.cut(
+          deltaRound(canon, frame, col("deg") > mind, nSurv,
+            deltaMaxAlive)
+            .observe(obs, count(lit(1)).as("n"),
+              min(col("deg")).as("mind")))
+        k = mind.toInt + 1
+      } else {
+        // peel: everyone below k - including nodes the delta carried
+        // to zero when their last neighbor fell - leaves with core
+        // number k-1; a plain filter over the cached frame replaces
+        // the old anti-join (lazy locally / pinned under the reliable
+        // policy — see the jump branch)
+        assigned += chain.pinIfReliable(frame.where(col("deg") < k)
+          .select(col("node"), lit((k - 1).toLong).as("core")))
+        frame = chain.cut(
+          deltaRound(canon, frame, col("deg") >= k, nSurv,
+            deltaMaxAlive)
+            .observe(obs, count(lit(1)).as("n"),
+              min(col("deg")).as("mind")))
       }
-      var nSurv = obsLong(obs0, "n")
-      var mind = obsLong(obs0, "mind")
-      var k = 1
-      var round = 0
-      val assigned = Vector.newBuilder[DataFrame]
-      while (nSurv > 0L) {
-        round += 1
-        require(round <= maxRounds,
-          s"KCore: core decomposition not finished after $maxRounds " +
-            s"rounds ($nSurv nodes unassigned at k=$k) - a capped run " +
-            "would mislabel every unassigned node's core; raise " +
-            "maxRounds for this cascade")
-        val obs = org.apache.spark.sql.Observation()
-        if (mind >= k) {
-          // nothing below k: the survivor set IS the k-core - and the
-          // k'-core for every k' up to its min degree d, so the
-          // intermediate thresholds are provably empty rungs and
-          // climbing them one at a time would burn one full round each
-          // (on a clique that is the whole ladder). Jump to d+1 AND
-          // execute that rung's first peel sub-round straight off the
-          // ALREADY-MATERIALIZED degree frame: the deg==d support
-          // level leaves with core d.
-          // a plain filter over the ALREADY-CUT frame: lazy locally
-          // (zero-recompute read of the round's checkpoint blocks —
-          // the eager pin was one extra action per rung), pinned under
-          // the reliable policy (the window deletes the frame's files
-          // two cuts later while the final union still reads the view)
-          assigned += chain.pinIfReliable(frame.where(col("deg") === mind)
-            .select(col("node"), lit(mind).as("core")))
-          frame = chain.cut(
-            deltaRound(canon, frame, col("deg") > mind, nSurv)
-              .observe(obs, count(lit(1)).as("n"),
-                min(col("deg")).as("mind")))
-          k = mind.toInt + 1
-        } else {
-          // peel: everyone below k - including nodes the delta carried
-          // to zero when their last neighbor fell - leaves with core
-          // number k-1; a plain filter over the cached frame replaces
-          // the old anti-join (lazy locally / pinned under the reliable
-          // policy — see the jump branch)
-          assigned += chain.pinIfReliable(frame.where(col("deg") < k)
-            .select(col("node"), lit((k - 1).toLong).as("core")))
-          frame = chain.cut(
-            deltaRound(canon, frame, col("deg") >= k, nSurv)
-              .observe(obs, count(lit(1)).as("n"),
-                min(col("deg")).as("mind")))
-        }
-        nSurv = obsLong(obs, "n")
-        mind = obsLong(obs, "mind")
-      }
-      val frames = assigned.result()
-      // self-loop-only input: the guards pass (edges exist) but the
-      // canonical simple graph is empty — the graceful empty frame,
-      // matching peel's behavior on the identical input
-      if (frames.isEmpty) {
-        // the initial survivors cut is tracked but the empty result
-        // reads nothing — reclaim it (the finisher contract holds on
-        // every exit path)
-        chain.reclaimAll()
-        canon.select(col("u").as("node"), lit(0L).as("core")).limit(0)
-      }
-      // seal: the final cut this ladder always had, now also reclaiming
-      // every rung's pinned + windowed files under the reliable policy
-      else chain.seal(frames.reduce(_ unionAll _))
-    } finally canon.unpersist()
+      nSurv = obsLong(obs, "n")
+      mind = obsLong(obs, "mind")
+    }
+    val frames = assigned.result()
+    // self-loop-only input: the guards pass (edges exist) but the
+    // canonical simple graph is empty — the graceful empty frame,
+    // matching peel's behavior on the identical input
+    if (frames.isEmpty) {
+      // the initial survivors cut is tracked but the empty result
+      // reads nothing — reclaim it (the finisher contract holds on
+      // every exit path)
+      chain.reclaimAll()
+      canon.select(col("u").as("node"), lit(0L).as("core")).limit(0)
+    }
+    // seal: the final cut this ladder always had, now also reclaiming
+    // every rung's pinned + windowed files under the reliable policy
+    else chain.seal(frames.reduce(_ unionAll _))
   }
 }

@@ -1,7 +1,8 @@
 package graft.operators
 
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import graft.plans.Checkpoints
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,33 +30,45 @@ import org.apache.spark.sql.functions._
   * never a global or corpus-sized sort. Labels are lineage-cut per
   * round (graft.plans.Checkpoints — localCheckpoint by default,
   * reliable checkpoint under spark.graft.checkpoint.dir).
-  * Input tolerance and guards match [[Triangles.localCounts]].
+  * Input tolerance and guards are [[GraphInput]]'s, as in
+  * [[Triangles.localCounts]].
   */
 object LabelPropagation {
 
-  /** ONE guarded canonicalizer for every entry point: the empty/NULL
-    * guards (a degraded feed must fail loudly, with the consequence
-    * named per call site) + the undirected canonical simple-edge frame.
+  /** Guard wording (empty advice, NULL consequence) of the faces that
+    * refine a labeling and of the faces that measure one.
     */
-  private def guardedCanon(edges: DataFrame, who: String,
-                           emptyAdvice: String,
-                           nullConsequence: String): DataFrame = {
-    val raw = edges.select(col("src"), col("dst"))
-    val g = raw.agg(count(lit(1)),
-      count(when(col("src").isNotNull && col("dst").isNotNull, 1))).head()
-    require(g.getLong(0) > 0, s"$who: empty edge frame — $emptyAdvice")
-    require(g.getLong(1) == g.getLong(0),
-      s"$who: ${g.getLong(0) - g.getLong(1)} edges carry a NULL " +
-        s"endpoint — $nullConsequence; repair the edge feed")
-    raw.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
+  private val Refining = (
+    "refine against the SAME edges the labeling was computed on",
+    "their gains would silently vanish")
+  private val Measuring = (
+    "measure against the SAME edges the labeling was computed on",
+    "they would silently deflate m and skew the reported num/den/ppm")
+
+  /** The frames every modularity-lattice face reads, over ONE guarded
+    * canonical pin ([[GraphInput]]): `m` rides the pin and enters plans
+    * as a 1-row LOCAL frame (the per-round crossJoin(broadcast(m))
+    * broadcasts driver-local data instead of scheduling a count job per
+    * consumer plan), and the degree frame is pinned because every
+    * round or measured state reads it. The caller finishes `chain`.
+    */
+  private final case class GraphFrames(chain: Checkpoints.Chain,
+                                       canon: DataFrame, m: DataFrame,
+                                       deg: DataFrame) {
+    /** (node, nbr, w = 1) — a map-only derivation over the pin. */
+    def adjW: DataFrame =
+      GraphInput.adjacency(canon).withColumn("w", lit(1L))
   }
 
-  private def adjOf(canon: DataFrame): DataFrame =
-    canon.select(col("u").as("node"), col("v").as("nbr"))
-      .unionAll(canon.select(col("v").as("node"), col("u").as("nbr")))
+  private def graphFrames(edges: DataFrame, who: String,
+                          wording: (String, String)): GraphFrames = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val chain = Checkpoints.chain() // reliable-policy file GC
+    val g = GraphInput.undirected(chain, edges, who, wording._1, wording._2)
+    GraphFrames(chain, g.edges, Seq(g.m).toDF("m"),
+      chain.pin(GraphInput.degrees(g.edges)))
+  }
 
   /** @param edges  columns `src`, `dst` (undirected; canonicalized)
     * @param rounds fixed synchronous update rounds (>= 1)
@@ -63,38 +76,35 @@ object LabelPropagation {
     */
   def run(spark: SparkSession, edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"LabelPropagation: rounds must be >= 1, got $rounds")
-    val canon = guardedCanon(edges, "LabelPropagation",
-      "land edges before labeling",
-      "their votes would silently vanish from every neighborhood")
-      .persist()
-    try {
-      val chain = graft.plans.Checkpoints.chain() // reliable-policy file GC
-      val adj = chain.pin(adjOf(canon)) // read every round
-      var labels = adj.select(col("node")).distinct()
-        .select(col("node"), col("node").as("community"))
-      val byVote = Window.partitionBy(col("node"))
-        .orderBy(col("cnt").desc, col("community"))
-      (1 to rounds).foreach { i =>
-        labels = adj
-          .join(labels.select(col("node").as("nbr"), col("community")),
-            "nbr")
-          .groupBy(col("node"), col("community"))
-          .agg(count(lit(1)).as("cnt"))
-          .withColumn("__rn", row_number().over(byVote))
-          .where(col("__rn") === 1)
-          .select(col("node"), col("community"))
-        // FIXED round count, each round references the previous labels
-        // exactly once — the plan grows linearly, so intermediate cuts
-        // were pure materialization overhead (guide §5); one cut per
-        // CutStride rounds bounds plan depth and the reliable-policy
-        // recompute window, and the LAST round always cuts so the
-        // returned (memoized, thrice-probed) frame is a zero-recompute
-        // read of the materialized labeling.
-        if (i == rounds || i % graft.plans.Checkpoints.CutStride == 0)
-          labels = chain.cut(labels)
-      }
-      chain.sealIfReliable(labels)
-    } finally canon.unpersist()
+    val chain = Checkpoints.chain() // reliable-policy file GC
+    // read every round: a map-only derivation over the pinned canon
+    val adj = GraphInput.adjacency(GraphInput.undirected(chain, edges,
+      "LabelPropagation", "land edges before labeling",
+      "their votes would silently vanish from every neighborhood").edges)
+    var labels = adj.select(col("node")).distinct()
+      .select(col("node"), col("node").as("community"))
+    val byVote = Window.partitionBy(col("node"))
+      .orderBy(col("cnt").desc, col("community"))
+    (1 to rounds).foreach { i =>
+      labels = adj
+        .join(labels.select(col("node").as("nbr"), col("community")),
+          "nbr")
+        .groupBy(col("node"), col("community"))
+        .agg(count(lit(1)).as("cnt"))
+        .withColumn("__rn", row_number().over(byVote))
+        .where(col("__rn") === 1)
+        .select(col("node"), col("community"))
+      // FIXED round count, each round references the previous labels
+      // exactly once — the plan grows linearly, so intermediate cuts
+      // were pure materialization overhead (guide §5); one cut per
+      // CutStride rounds bounds plan depth and the reliable-policy
+      // recompute window, and the LAST round always cuts so the
+      // returned (memoized, thrice-probed) frame is a zero-recompute
+      // read of the materialized labeling.
+      if (i == rounds || i % Checkpoints.CutStride == 0)
+        labels = chain.cut(labels)
+    }
+    chain.sealIfReliable(labels)
   }
 
   /** One synchronous MODULARITY local-move round — Louvain's move
@@ -125,18 +135,12 @@ object LabelPropagation {
     * @return (node, community) after the one move round
     */
   def refineOnce(labels: DataFrame, edges: DataFrame): DataFrame = {
-    // the run() guards verbatim (via guardedCanon): a silently
-    // empty/NULL-degraded edge frame would strip every candidate and
-    // return the input labeling while looking like a clean no-gain round
-    val canon = guardedCanon(edges, "refineOnce",
-      "refine against the SAME edges the labeling was computed on",
-      "their gains would silently vanish")
-    val adj = adjOf(canon)
-    val deg = adj.groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    refineOnceOnW(adj.withColumn("w", lit(1L)),
-        canon.agg(count(lit(1)).as("m")),
-        withDeg(labels, deg))
-      .select(col("node"), col("community"))
+    // the run() guards: a silently empty/NULL-degraded edge frame would
+    // strip every candidate and return the input labeling while looking
+    // like a clean no-gain round
+    val g = graphFrames(edges, "refineOnce", Refining)
+    g.chain.sealIfReliable(refineOnceOnW(g.adjW, g.m, withDeg(labels, g.deg))
+      .select(col("node"), col("community")))
   }
 
   /** Attach each labeled node's degree to the label frame — the
@@ -262,146 +266,68 @@ object LabelPropagation {
     * Scale notes: each round costs one [[refineOnce]] plus one
     * label-compare count and one [[modularity]] measurement — all
     * LPA-round-shaped jobs; the trace itself is O(rounds) driver rows.
-    * Labels are lineage-cut per round ([[graft.plans.Checkpoints]]).
+    * Every round's labels are pinned on one [[Checkpoints]] chain.
     *
     * @return trace (round, moved, communities, m_edges,
-    *         modularity_num, modularity_den, modularity_ppm) — and the
-    *         FINAL labeling equals the round-`last` labeling, obtained
-    *         via [[refine]] when only the labels are wanted
+    *         modularity_num, modularity_den, modularity_ppm) — the
+    *         last row's labeling is the gain fixpoint
     */
-  /** THE fixpoint loop — one copy of the convergence machinery
-    * (lineage cuts, moved-count join, early stop, loud cap) shared by
-    * [[refine]] and [[refineTrace]], so their contracts cannot drift.
-    * Returns every round's state (round, moved, labels) plus the shared
-    * frames and the chain, so the caller picks its finisher: refine
-    * seals the last labeling; refineTrace measures ALL rounds in one
-    * action and then reclaims.
-    */
-  private final case class GraphFrames(canon: DataFrame, m: DataFrame,
-                                       deg: DataFrame)
-
-  /** [[guardedCanon]] with the guard aggregate DEFERRED onto the
-    * caller's first materialization (optimization guide §1.2: the
-    * eager guard was a second full edge scan per loop): returns the
-    * canon plan with the raw-edge guard metrics observed beneath it,
-    * plus the check thunk the caller MUST invoke right after the
-    * plan's first action — the refusal still fires before any result
-    * is published (the failure path pays one wasted materialization;
-    * the success path saves a full scan).
-    */
-  private def guardedCanonDeferred(edges: DataFrame, who: String,
-                                   emptyAdvice: String,
-                                   nullConsequence: String)
-      : (DataFrame, () => Unit) = {
-    val obs = org.apache.spark.sql.Observation()
-    val raw = edges.select(col("src"), col("dst"))
-      .observe(obs, count(lit(1)).as("n_all"),
-        count(when(col("src").isNotNull && col("dst").isNotNull, 1))
-          .as("n_ok"))
-    val canon = raw.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val check = () => {
-      val nAll = obs.get("n_all").asInstanceOf[Long]
-      val nOk = obs.get("n_ok").asInstanceOf[Long]
-      require(nAll > 0, s"$who: empty edge frame — $emptyAdvice")
-      require(nOk == nAll,
-        s"$who: ${nAll - nOk} edges carry a NULL " +
-          s"endpoint — $nullConsequence; repair the edge feed")
-    }
-    (canon, check)
-  }
-
-  private def refineLoop(labels: DataFrame, edges: DataFrame,
-                         maxRounds: Int, who: String,
-                         pinRounds: Boolean = false)
-      : (Vector[(Int, Long, DataFrame)], GraphFrames,
-         graft.plans.Checkpoints.Chain) = {
-    require(maxRounds >= 1, s"$who: maxRounds must be >= 1, got $maxRounds")
+  def refineTrace(labels: DataFrame, edges: DataFrame,
+                  maxRounds: Int): DataFrame = {
+    require(maxRounds >= 1,
+      s"refineTrace: maxRounds must be >= 1, got $maxRounds")
     val spark = labels.sparkSession
     import spark.implicits._
-    // guards + label-INdependent frames ONCE for the whole loop, and
-    // ONE materialization for guard + canon + m: the guard aggregate
-    // and m (the canonical edge count) ride the canon pin as
-    // Observations, the adjacency is a map-only union DERIVED from the
-    // pinned canon (materializing it doubled the pinned edge bytes for
-    // a shuffle-free derivation), and only the degree frame needs its
-    // own aggregate pass.
-    val chain = graft.plans.Checkpoints.chain() // reliable-policy file GC
-    val (canonPlan, guardCheck) = guardedCanonDeferred(edges, who,
-      "refine against the SAME edges the labeling was computed on",
-      "their gains would silently vanish")
-    val obsM = org.apache.spark.sql.Observation()
-    val canon = chain.pin(canonPlan.observe(obsM, count(lit(1)).as("m")))
-    guardCheck()
-    // m as a 1-row LOCAL frame: the per-round crossJoin(broadcast(m))
-    // broadcasts driver-local data instead of scheduling a count
-    // aggregate job per consumer plan
-    val m = Seq(obsM.get("m").asInstanceOf[Long]).toDF("m")
-    val adj = adjOf(canon)
-    val deg = chain.pin(adj.groupBy(col("node")).agg(count(lit(1)).as("deg")))
-    val ctx = GraphFrames(canon, m, deg)
-    // trace mode PINS each round's labels (the deferred one-action
+    // guard + label-INdependent frames ONCE for the whole loop: the
+    // guard and m ride the canon pin, only the degree frame needs its
+    // own aggregate pass
+    val g = graphFrames(edges, "refineTrace", Refining)
+    val adjW = g.adjW
+    // every round's labels are PINNED (the deferred one-action
     // measurement reads every round after the loop; a window cut's
     // files would be reclaimed mid-loop under the reliable policy) —
-    // O(rounds) retention for the trace face only, reclaimed by its
-    // finisher; refine keeps the O(1) window
-    def cutRound(df: DataFrame): DataFrame =
-      if (pinRounds) chain.pin(df) else chain.cut(df)
-    // labels enter the loop deg-CARRYING (withDeg): the degree join
-    // happens ONCE here instead of twice per round (r21, guide §2.4)
-    val adjW = adj.withColumn("w", lit(1L))
-    var lab = cutRound(withDeg(labels, deg))
+    // O(rounds) retention, reclaimed by the finisher. Labels enter the
+    // loop deg-CARRYING (withDeg): the degree join happens ONCE here
+    // instead of twice per round (r21, guide §2.4)
+    var lab = g.chain.pin(withDeg(labels, g.deg))
     var states = Vector((0, 0L, lab))
     var moved = -1L
     var round = 0
     while (moved != 0L && round < maxRounds) {
       round += 1
-      // ONE action per round: the moved count rides the cut's
+      // ONE action per round: the moved count rides the pin's
       // materialization as an Observation on the __moved flag instead
       // of a second compare-join job (measured ~1 job per round off
       // the registered trace rows)
       val obs = org.apache.spark.sql.Observation()
-      val next = cutRound(
-        refineOnceOnW(adjW, m, lab)
-          .observe(obs, coalesce(sum(col("__moved").cast("long")),
-            lit(0L)).as("mv")) // empty labeling: 0, not null
-          .select(col("node"), col("community"), col("deg")))
+      lab = g.chain.pin(refineOnceOnW(adjW, g.m, lab)
+        .observe(obs, coalesce(sum(col("__moved").cast("long")),
+          lit(0L)).as("mv")) // empty labeling: 0, not null
+        .select(col("node"), col("community"), col("deg")))
       moved = obs.get("mv").asInstanceOf[Long]
-      lab = next
       states :+= ((round, moved, lab))
     }
     require(moved == 0L,
-      s"$who: no fixpoint within $maxRounds rounds (last round " +
+      s"refineTrace: no fixpoint within $maxRounds rounds (last round " +
         s"still moved $moved nodes) — raise maxRounds; publishing a " +
         "non-fixpoint labeling as refined would mislabel the " +
         "communities later rounds merge")
-    (states, ctx, chain)
-  }
-
-  def refineTrace(labels: DataFrame, edges: DataFrame,
-                  maxRounds: Int): DataFrame = {
-    val spark = labels.sparkSession
-    val (states, ctx, chain) = refineLoop(labels, edges, maxRounds,
-      "refineTrace", pinRounds = true)
     // ONE measurement action AND one measurement PLAN for the whole
     // trace (r21, guide §2.4 — was one modularity subplan per round
     // unioned): every round's pinned deg-carrying labels are tagged
     // with their round index and measured through modularityByState's
     // single set of joins. Rows are keyed by the tag — the contract is
     // the round column, not partition order.
-    val tagged = states.map { case (r, _, lab) =>
-      lab.select(lit(r.toLong).as("__st"), col("node"), col("community"),
+    val tagged = states.map { case (r, _, l) =>
+      l.select(lit(r.toLong).as("__st"), col("node"), col("community"),
         col("deg"))
     }.reduce(_ unionAll _)
-    val byRound = modularityByState(ctx.canon, ctx.m, tagged).collect()
+    val byRound = modularityByState(g.canon, g.m, tagged).collect()
       .map(r => r.getLong(0) -> r).toMap
     // the trace is DRIVER-side rows: reclaim with no final cut (a seal
     // would park one labeling-sized frame per call forever AND pay a
     // wasted distributed write)
-    chain.reclaimAll()
-    import spark.implicits._
+    g.chain.reclaimAll()
     states.flatMap { case (r, mv, _) =>
       byRound.get(r.toLong).map(row => (r.toLong, mv, row.getLong(1),
         row.getLong(2), row.getLong(3), row.getLong(4), row.getLong(5)))
@@ -410,19 +336,8 @@ object LabelPropagation {
         "modularity_den", "modularity_ppm")
   }
 
-  /** The fixpoint labeling itself (the production artifact);
-    * [[refineTrace]] is the measurement row beside it. Same loud cap.
-    */
-  def refine(labels: DataFrame, edges: DataFrame,
-             maxRounds: Int): DataFrame = {
-    val (states, _, chain) = refineLoop(labels, edges, maxRounds, "refine")
-    // drop the carried deg from the public face — a lazy projection
-    // over the cut frame (zero-recompute read under the local policy)
-    chain.sealIfReliable(states.last._3.select(col("node"), col("community")))
-  }
-
   /** FULL Louvain (Blondel et al. 2008): iterate (move phase to a
-    * gain fixpoint — [[refineLoop]]'s contract — then COMMUNITY
+    * gain fixpoint — [[refineTrace]]'s contract — then COMMUNITY
     * CONTRACTION) until a post-contraction move phase finds no gain.
     * The contraction is the phase the down-label node moves cannot
     * express: a whole community relocating at once, whose gain
@@ -448,7 +363,7 @@ object LabelPropagation {
     * plateau proves nothing about the contracted view); the loop
     * stops at the first phase ≥ 2 whose move total is 0. Loud caps on
     * both rounds and phases — a capped run REFUSES, never publishes a
-    * non-fixpoint labeling (the refineLoop discipline).
+    * non-fixpoint labeling (the refineTrace discipline).
     *
     * Measure-don't-assume: every round's modularity is measured on
     * the ORIGINAL graph with the FLATTENED labels (round 0 of each
@@ -475,25 +390,17 @@ object LabelPropagation {
         "fixpoint claim")
     val spark = labels.sparkSession
     import spark.implicits._
-    val chain = graft.plans.Checkpoints.chain()
     // level-0 graph (pinned: every round's measurement reads it). ONE
-    // materialization covers guard + canon + m (the refineLoop
-    // discipline): the guard aggregate and the constant total weight
-    // ride the canon pin as Observations; the adjacency is a map-only
-    // union DERIVED from the pin, never materialized twice.
-    val (canon0Plan, guardCheck) = guardedCanonDeferred(edges,
-      "louvainPhases",
-      "refine against the SAME edges the labeling was computed on",
-      "their gains would silently vanish")
-    val obsM = org.apache.spark.sql.Observation()
-    val canon0 = chain.pin(canon0Plan.observe(obsM, count(lit(1)).as("m")))
-    guardCheck()
-    // total weight — constant across levels (the Blondel invariant);
-    // a 1-row LOCAL frame broadcasts joblessly into every round plan
-    val m = Seq(obsM.get("m").asInstanceOf[Long]).toDF("m")
-    val adj0 = adjOf(canon0)
-    val deg0 = chain.pin(adj0.groupBy(col("node"))
-      .agg(count(lit(1)).as("deg")))
+    // materialization covers guard + canon + m ([[graphFrames]]); m is
+    // the constant total weight across levels (the Blondel invariant).
+    // The adjacency is a map-only union DERIVED from the pin, never
+    // materialized twice.
+    val g = graphFrames(edges, "louvainPhases", Refining)
+    val chain = g.chain
+    val canon0 = g.canon
+    val m = g.m
+    val adj0 = GraphInput.adjacency(canon0)
+    val deg0 = g.deg
 
     // DEFERRED measurement (one action for the whole trace, was one
     // head() per round): every recorded state keeps its lazy flattened-
@@ -543,7 +450,7 @@ object LabelPropagation {
       var total = 0L
       while (moved != 0L && round < maxRounds) {
         round += 1
-        // moved rides the pin's Observation (the refineLoop shape);
+        // moved rides the pin's Observation (the refineTrace shape);
         // PINNED because the deferred trace reads every round
         val obs = org.apache.spark.sql.Observation()
         val next = chain.pin(refineOnceOnW(adjW, m, lab)
@@ -632,6 +539,53 @@ object LabelPropagation {
         "modularity_num", "modularity_den", "modularity_ppm")
   }
 
+  /** Modularity of TWO labelings over the SAME edge frame in ONE
+    * shared-frame plan (r21 resume, guide §2.4): the A/B rows ran two
+    * independent [[modularity]] subplans — two eager guard scans, two
+    * canon distincts, two degree aggregates and two full sets of
+    * measurement joins over identical edges. Here the guard + m ride
+    * ONE canon pin, the degree aggregate runs once, and both labelings
+    * are measured through [[modularityByState]]'s single set of
+    * (__st-keyed) joins. Per-state arithmetic is unchanged — identical
+    * rows out, keyed `__st` = 0 (labelsA) / 1 (labelsB).
+    */
+  def modularityAB(labelsA: DataFrame, labelsB: DataFrame,
+                   edges: DataFrame): DataFrame = {
+    val g = graphFrames(edges, "modularity", Measuring)
+    val tagged = withDeg(labelsA, g.deg)
+      .select(lit(0L).as("__st"), col("node"), col("community"), col("deg"))
+      .unionAll(withDeg(labelsB, g.deg)
+        .select(lit(1L).as("__st"), col("node"), col("community"),
+          col("deg")))
+    g.chain.sealIfReliable(modularityByState(g.canon, g.m, tagged))
+  }
+
+  /** One [[refineOnce]] move round PLUS the before/after modularity
+    * measurement, all over ONE set of shared frames (r21 resume, guide
+    * §2.4): the composed form (refineOnce + modularity(input) +
+    * modularity(refined)) ran THREE guarded canon scans and three
+    * degree aggregates, and the un-cut refined plan was duplicated
+    * into each of the measurement's label joins. Here the shared
+    * frames build once, the refined labeling is lineage-cut once (the
+    * refineTrace round discipline — the measurement reads its blocks
+    * instead of re-running the move round per join), and both states
+    * measure through [[modularityByState]]'s single plan. Same move
+    * arithmetic, same measurement rows — keyed `__st` = 0 (the input
+    * labeling) / 1 (after the move round).
+    */
+  def refineOnceMeasured(labels: DataFrame, edges: DataFrame): DataFrame = {
+    val g = graphFrames(edges, "refineOnce", Measuring)
+    val labD = withDeg(labels, g.deg)
+    val refined = g.chain.cut(refineOnceOnW(g.adjW, g.m, labD)
+      .select(col("node"), col("community"), col("deg")))
+    val tagged = labD
+      .select(lit(0L).as("__st"), col("node"), col("community"), col("deg"))
+      .unionAll(refined
+        .select(lit(1L).as("__st"), col("node"), col("community"),
+          col("deg")))
+    g.chain.sealIfReliable(modularityByState(g.canon, g.m, tagged))
+  }
+
   /** Newman–Girvan modularity of a labeling on the INTEGER LATTICE —
     * the measure-don't-assume row every heuristic operator carries,
     * for LPA: Q = Σ_c [ in_c/m − (d_c/2m)² ] over communities c, with
@@ -658,107 +612,18 @@ object LabelPropagation {
     * @return one row: (communities, m_edges, modularity_num,
     *         modularity_den, modularity_ppm)
     */
-  /** Shared-frame setup for the one-plan A/B measurement faces below
-    * (r21 resume, guide §2.4): ONE guarded canon materialization (the
-    * guard metrics and m ride it as Observations — the refineLoop
-    * discipline), one pinned degree aggregate, and the caller builds
-    * its tagged states over those frames. Returns (chain, canon, m,
-    * adjW, deg) with canon/deg pinned on the chain.
-    */
-  private def sharedGraphFrames(edges: DataFrame, who: String)
-      : (graft.plans.Checkpoints.Chain, DataFrame, DataFrame, DataFrame,
-         DataFrame) = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val chain = graft.plans.Checkpoints.chain()
-    val (canonPlan, guardCheck) = guardedCanonDeferred(edges, who,
-      "measure against the SAME edges the labeling was computed on",
-      "they would silently deflate m and skew the reported num/den/ppm")
-    val obsM = org.apache.spark.sql.Observation()
-    val canon = chain.pin(canonPlan.observe(obsM, count(lit(1)).as("m")))
-    guardCheck()
-    val m = Seq(obsM.get("m").asInstanceOf[Long]).toDF("m")
-    val adj = adjOf(canon)
-    val deg = chain.pin(adj.groupBy(col("node"))
-      .agg(count(lit(1)).as("deg")))
-    (chain, canon, m, adj.withColumn("w", lit(1L)), deg)
-  }
-
-  /** Modularity of TWO labelings over the SAME edge frame in ONE
-    * shared-frame plan (r21 resume, guide §2.4): the A/B rows ran two
-    * independent [[modularity]] subplans — two eager guard scans, two
-    * canon distincts, two degree aggregates and two full sets of
-    * measurement joins over identical edges. Here the guard + m ride
-    * ONE canon pin, the degree aggregate runs once, and both labelings
-    * are measured through [[modularityByState]]'s single set of
-    * (__st-keyed) joins. Per-state arithmetic is unchanged — identical
-    * rows out, keyed `__st` = 0 (labelsA) / 1 (labelsB).
-    */
-  def modularityAB(labelsA: DataFrame, labelsB: DataFrame,
-                   edges: DataFrame): DataFrame = {
-    val (chain, canon, m, _, deg) = sharedGraphFrames(edges, "modularity")
-    val tagged = withDeg(labelsA, deg)
-      .select(lit(0L).as("__st"), col("node"), col("community"), col("deg"))
-      .unionAll(withDeg(labelsB, deg)
-        .select(lit(1L).as("__st"), col("node"), col("community"),
-          col("deg")))
-    chain.sealIfReliable(modularityByState(canon, m, tagged))
-  }
-
-  /** One [[refineOnce]] move round PLUS the before/after modularity
-    * measurement, all over ONE set of shared frames (r21 resume, guide
-    * §2.4): the composed form (refineOnce + modularity(input) +
-    * modularity(refined)) ran THREE guarded canon scans and three
-    * degree aggregates, and the un-cut refined plan was duplicated
-    * into each of the measurement's label joins. Here the shared
-    * frames build once, the refined labeling is lineage-cut once (the
-    * refineLoop round discipline — the measurement reads its blocks
-    * instead of re-running the move round per join), and both states
-    * measure through [[modularityByState]]'s single plan. Same move
-    * arithmetic, same measurement rows — keyed `__st` = 0 (the input
-    * labeling) / 1 (after the move round).
-    */
-  def refineOnceMeasured(labels: DataFrame, edges: DataFrame): DataFrame = {
-    val (chain, canon, m, adjW, deg) =
-      sharedGraphFrames(edges, "refineOnce")
-    val labD = withDeg(labels, deg)
-    val refined = chain.cut(refineOnceOnW(adjW, m, labD)
-      .select(col("node"), col("community"), col("deg")))
-    val tagged = labD
-      .select(lit(0L).as("__st"), col("node"), col("community"), col("deg"))
-      .unionAll(refined
-        .select(lit(1L).as("__st"), col("node"), col("community"),
-          col("deg")))
-    chain.sealIfReliable(modularityByState(canon, m, tagged))
-  }
-
   def modularity(labels: DataFrame, edges: DataFrame): DataFrame = {
-    // the run()/refineOnce() guards (via guardedCanon): the self-loop
-    // predicate silently DROPS NULL-endpoint edges, deflating m and
-    // skewing num/den/ppm on a degraded feed — and this row is a
-    // MEASUREMENT consumers threshold on, the one place a silent
-    // quality number is worst. Same empty-frame refusal: Q of nothing
-    // is not 0, it is "no edges landed".
-    val canon = guardedCanon(edges, "modularity",
-      "measure against the SAME edges the labeling was computed on",
-      "they would silently deflate m and skew the reported num/den/ppm")
-    val adj = adjOf(canon)
-    modularityOn(canon,
-      canon.agg(count(lit(1)).as("m")),
-      adj.groupBy(col("node")).agg(count(lit(1)).as("deg")),
-      labels)
+    // the run()/refineOnce() guards: the self-loop predicate silently
+    // DROPS NULL-endpoint edges, deflating m and skewing num/den/ppm on
+    // a degraded feed — and this row is a MEASUREMENT consumers
+    // threshold on, the one place a silent quality number is worst.
+    // Same empty-frame refusal: Q of nothing is not 0, it is "no edges
+    // landed".
+    val g = graphFrames(edges, "modularity", Measuring)
+    g.chain.sealIfReliable(modularityOnD(g.canon, g.m, withDeg(labels, g.deg)))
   }
 
-  /** [[modularity]]'s core against PRE-BUILT shared frames — the
-    * iterated trace measures every round against the SAME canon/m
-    * frames it refines on. Joins the degree frame once ([[withDeg]]).
-    */
-  private def modularityOn(canon: DataFrame, m: DataFrame,
-                           degs: DataFrame, labels: DataFrame): DataFrame =
-    modularityOnD(canon, m, withDeg(labels, degs.select(col("node"),
-      col("deg"))))
-
-  /** [[modularityOn]] against a deg-CARRYING label frame (r21): the
+  /** [[modularity]]'s core against a deg-CARRYING label frame (r21): the
     * loops' states already carry each node's degree, so the
     * measurement pays no per-state degree join. The null filter
     * mirrors [[withDeg]]'s left join back to the old inner-join rows.

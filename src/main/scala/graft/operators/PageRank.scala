@@ -154,25 +154,15 @@ object PageRank {
   /** @param edges  columns `src`, `dst` (node ids); every node
     *               referenced must appear as a `src` at least once
     * @param iters  fixed iteration count (both engines unroll the same K)
-    * @param checkDangling run the eager dangling-node guard (default).
-    *               BEHAVIOR NOTE (since the r16 contract change): these
-    *               faces now FAIL LOUDLY on sink nodes that older
-    *               releases accepted with a silent mass leak — callers
-    *               with genuinely dangling graphs should move to
-    *               [[runDanglingRedistributed]]. Callers whose feed is
-    *               CONTRACTED sink-free upstream may pass `false` to
-    *               skip the guard's extra distinct+anti-join pass in
-    *               hot loops — doing so restores the old silent-leak
-    *               failure mode on a broken feed, so it trades one
-    *               metadata-plane job per run for the loud contract.
-    * @return (node, rank_scaled) — one row per node, rank in SCALE units
+    * @return (node, rank_scaled) — one row per node, rank in SCALE units.
+    *         Sink nodes (dst but never src) FAIL LOUDLY; callers with
+    *         genuinely dangling graphs use [[runDanglingRedistributed]].
     */
-  def run(spark: SparkSession, edges: DataFrame, iters: Int,
-          checkDangling: Boolean = true): DataFrame = {
+  def run(spark: SparkSession, edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val ewt = annotate(edges, lit(1L)).persist() // reused every round
     try {
-      if (checkDangling) requireNoDangling(ewt)
+      requireNoDangling(ewt)
       val nodes = ewt.select(col("src").as("node")).distinct()
       val n = nodes.count() // ONE driver scalar: |V|
       require(n > 0, "PageRank: empty graph")
@@ -190,8 +180,8 @@ object PageRank {
     * bounded by [[MaxWeight]] (one metadata-plane aggregate on the
     * persisted frame) so the BIGINT product cannot wrap.
     */
-  def runWeighted(spark: SparkSession, edges: DataFrame, iters: Int,
-                  checkDangling: Boolean = true): DataFrame = {
+  def runWeighted(spark: SparkSession, edges: DataFrame,
+                  iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val ewt = annotate(edges, col("w")).persist()
     try {
@@ -211,7 +201,7 @@ object PageRank {
       require(b.getLong(3) <= MaxWeight,
         s"PageRank.runWeighted: max weight ${b.getLong(3)} exceeds " +
           s"$MaxWeight — r*w would overflow the integer lattice")
-      if (checkDangling) requireNoDangling(ewt)
+      requireNoDangling(ewt)
       val nodes = ewt.select(col("src").as("node")).distinct()
       val n = nodes.count()
       val r0 = Scale / n
@@ -307,12 +297,11 @@ object PageRank {
     * loudly.
     */
   def runPersonalized(spark: SparkSession, edges: DataFrame,
-                      seeds: DataFrame, iters: Int,
-                      checkDangling: Boolean = true): DataFrame = {
+                      seeds: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val ewt = annotate(edges, lit(1L)).persist()
     try {
-      if (checkDangling) requireNoDangling(ewt)
+      requireNoDangling(ewt)
       val nodes = ewt.select(col("src").as("node")).distinct()
       val flagged = nodes.join(
         seeds.select(col("node"), lit(true).as("__seed")).distinct(),

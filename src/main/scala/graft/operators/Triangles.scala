@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.plans.Checkpoints.CutOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,7 +42,7 @@ object Triangles {
     * Input tolerance: direction, multi-edges and self-loops are
     * normalization noise in real link feeds — edges are canonicalized
     * to unordered pairs, self-loops dropped, duplicates merged. NULL
-    * endpoints are NOT tolerated (the [[Hits]] contract): a null would
+    * endpoints are NOT tolerated ([[GraphInput]]'s guard): a null would
     * silently vanish from the canonical pair frame and undercount its
     * partner's neighborhood, so the feed must be repaired first.
     *
@@ -52,74 +51,51 @@ object Triangles {
     *         least one neighbor; `lcc_ppm` = 0 where deg < 2
     */
   def localCounts(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val raw = edges.select(col("src"), col("dst"))
-    val g = raw.agg(count(lit(1)),
-      count(when(col("src").isNotNull && col("dst").isNotNull, 1))).head()
-    require(g.getLong(0) > 0,
-      "Triangles: empty edge frame — land edges before counting")
-    require(g.getLong(1) == g.getLong(0),
-      s"Triangles: ${g.getLong(0) - g.getLong(1)} edges carry a NULL " +
-        "endpoint — they would silently drop from the canonical pair " +
-        "frame and undercount their partner's neighborhood; repair the " +
-        "edge feed")
-    val canon = raw
-      .where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-      .persist()
-    val deg = canon.select(col("u").as("node"))
-      .unionAll(canon.select(col("v").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .persist()
-    var oriented: DataFrame = null
-    try {
-      // orient each edge from the (deg, node)-smaller endpoint to the
-      // larger; carry the head's degree so wedges can order their legs
-      // under the SAME total order without a re-join
-      val ed = canon
-        .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
-        .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
-      val uFirst = col("du") < col("dv") ||
-        (col("du") === col("dv") && col("u") < col("v"))
-      // persisted: three consumers below (both wedge legs + the
-      // closing-edge probe) would otherwise re-run the two degree
-      // joins each
-      oriented = ed.select(
-        when(uFirst, col("u")).otherwise(col("v")).as("a"),
-        when(uFirst, col("v")).otherwise(col("u")).as("b"),
-        when(uFirst, col("dv")).otherwise(col("du")).as("db"))
-        .persist()
-      // wedges (a→b1, a→b2) with b1 below b2 in the orientation order;
-      // the closing edge, if present, is oriented b1→b2 by construction
-      val o1 = oriented.select(col("a"), col("b").as("b1"),
-        col("db").as("db1"))
-      val o2 = oriented.select(col("a"), col("b").as("b2"),
-        col("db").as("db2"))
-      val tris = o1.join(o2, Seq("a"))
-        .where(col("db1") < col("db2") ||
-          (col("db1") === col("db2") && col("b1") < col("b2")))
-        .join(oriented.select(col("a").as("b1"), col("b").as("b2")),
-          Seq("b1", "b2"))
-        .select(col("a"), col("b1"), col("b2"))
-      val perNode = tris.select(col("a").as("node"))
-        .unionAll(tris.select(col("b1").as("node")))
-        .unionAll(tris.select(col("b2").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("tri_cnt"))
-      deg.join(perNode, Seq("node"), "left")
-        .select(col("node"), col("deg"),
-          coalesce(col("tri_cnt"), lit(0L)).as("tri_cnt"),
-          when(col("deg") >= 2,
-            expr("(2 * coalesce(tri_cnt, 0L) * 1000000) " +
-              "div (deg * (deg - 1))"))
-            .otherwise(lit(0L)).as("lcc_ppm"))
-        .cutLineage()
-    } finally {
-      // the eager localCheckpoint above already materialized through
-      // every cache, so nothing is recomputed by releasing them here —
-      // and a guard failure releases whatever was built before it
-      canon.unpersist(); deg.unpersist()
-      if (oriented != null) oriented.unpersist()
-    }
+    val chain = graft.plans.Checkpoints.chain() // reliable-policy file GC
+    val canon = GraphInput.undirected(chain, edges, "Triangles",
+      "land edges before counting",
+      "they would silently drop from the canonical pair frame and " +
+        "undercount their partner's neighborhood").edges
+    // orient each edge from the (deg, node)-smaller endpoint to the
+    // larger; carry the head's degree so wedges can order their legs
+    // under the SAME total order without a re-join. Both frames stay
+    // lazy over the pin: their three readers below (both wedge legs +
+    // the closing-edge probe) sit in ONE plan, so the degree aggregate's
+    // exchange is shared and only the map-side join probes repeat.
+    val deg = GraphInput.degrees(canon)
+    val ed = canon
+      .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
+      .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
+    val uFirst = col("du") < col("dv") ||
+      (col("du") === col("dv") && col("u") < col("v"))
+    val oriented = ed.select(
+      when(uFirst, col("u")).otherwise(col("v")).as("a"),
+      when(uFirst, col("v")).otherwise(col("u")).as("b"),
+      when(uFirst, col("dv")).otherwise(col("du")).as("db"))
+    // wedges (a→b1, a→b2) with b1 below b2 in the orientation order;
+    // the closing edge, if present, is oriented b1→b2 by construction
+    val o1 = oriented.select(col("a"), col("b").as("b1"),
+      col("db").as("db1"))
+    val o2 = oriented.select(col("a"), col("b").as("b2"),
+      col("db").as("db2"))
+    val tris = o1.join(o2, Seq("a"))
+      .where(col("db1") < col("db2") ||
+        (col("db1") === col("db2") && col("b1") < col("b2")))
+      .join(oriented.select(col("a").as("b1"), col("b").as("b2")),
+        Seq("b1", "b2"))
+      .select(col("a"), col("b1"), col("b2"))
+    val perNode = tris.select(col("a").as("node"))
+      .unionAll(tris.select(col("b1").as("node")))
+      .unionAll(tris.select(col("b2").as("node")))
+      .groupBy(col("node")).agg(count(lit(1)).as("tri_cnt"))
+    // seal: one eager cut of the result, then the pin's files are
+    // reclaimed under the reliable policy
+    chain.seal(deg.join(perNode, Seq("node"), "left")
+      .select(col("node"), col("deg"),
+        coalesce(col("tri_cnt"), lit(0L)).as("tri_cnt"),
+        when(col("deg") >= 2,
+          expr("(2 * coalesce(tri_cnt, 0L) * 1000000) " +
+            "div (deg * (deg - 1))"))
+          .otherwise(lit(0L)).as("lcc_ppm")))
   }
 }

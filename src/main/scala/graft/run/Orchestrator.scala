@@ -1683,22 +1683,14 @@ object Orchestrator {
       * oscillate), so the artifact records round-K labels; its loud
       * guards fire inside the failure scope.
       */
-    def refreshLpaCommunities(rounds: Int = 4, refine: Boolean = false,
-                              note: String = ""): Long =
-      refreshGraphArtifact("indexes/graph_communities", note)(edges => {
-        val lpa = graft.operators.LabelPropagation.run(spark, edges, rounds)
-        // optional deterministic Louvain move round on top — measured
-        // on the registered A/B to lift modularity where synchronous
-        // LPA under-merges (q_graph_lpa_refined: 11590 -> 452032 ppm)
-        if (refine) graft.operators.LabelPropagation.refineOnce(lpa, edges)
-        else lpa
-      })
+    def refreshLpaCommunities(rounds: Int = 4, note: String = ""): Long =
+      refreshGraphArtifact("indexes/graph_communities", note)(
+        graft.operators.LabelPropagation.run(spark, _, rounds))
 
     /** [[refreshIfDue]] around [[refreshLpaCommunities]]. */
-    def refreshLpaCommunitiesIfDue(rounds: Int = 4,
-                                   refine: Boolean = false): Option[Long] =
+    def refreshLpaCommunitiesIfDue(rounds: Int = 4): Option[Long] =
       refreshIfDue("indexes/graph_communities", "indexes/graph_edges")(
-        note => refreshLpaCommunities(rounds, refine, note))
+        note => refreshLpaCommunities(rounds, note))
 
     /** Per-document link-farm gate against the PERSISTED triangle
       * table — the table-backed production form of

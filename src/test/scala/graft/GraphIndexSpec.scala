@@ -324,4 +324,32 @@ class GraphIndexSpec extends AnyFunSuite with SparkTestBase {
       .as[(String, Long, Long)].collect().toSet === coreTable,
       "a failed refresh must leave the previous artifact intact")
   }
+
+  test("a NULL-endpoint edge batch lands FAILED before any graph artifact is written") {
+    // the guard rides the operators' first materialization; it must
+    // still refuse inside the failure scope, before the artifact write
+    val wh = java.nio.file.Files.createTempDirectory("graft_graphidx5").toString
+    val b = new Orchestrator.Run(spark, wh, "B1")
+    b.indexGraphBatch(Seq(("a", "b"), ("b", "c"), ("c", null: String))
+      .toDF("src", "dst"))
+    val refreshes = Seq[(String, () => Long)](
+      "indexes/graph_kcore" -> (() => b.refreshKCore()),
+      "indexes/graph_core_numbers" -> (() => b.refreshCoreNumbers()),
+      "indexes/graph_triangle_counts" -> (() => b.refreshTriangleCounts()),
+      "indexes/graph_communities" -> (() => b.refreshLpaCommunities()),
+      "indexes/graph_hits_scores" -> (() => b.refreshHitsScores()))
+    for ((target, refresh) <- refreshes) {
+      val e = intercept[IllegalArgumentException] { refresh() }
+      assert(e.getMessage.contains("NULL endpoint"), s"$target: ${e.getMessage}")
+      assert(b.auditLog.exists(l =>
+        l.step == "mv_refresh" && l.target == target
+          && l.status == "FAILED" && l.message.contains("NULL endpoint")),
+        s"$target: ${b.auditLog.mkString("; ")}")
+      assert(!new java.io.File(s"$wh/$target").exists(),
+        s"$target: a refused refresh must write no artifact")
+    }
+    assert(refreshes.map(_._1).toSet.subsetOf(
+      graft.run.Orchestrator.failedTargets(spark, wh, "B1")),
+      "the reprocess cycle must see every refused refresh")
+  }
 }

@@ -4,6 +4,7 @@ import graft.operators.JaccardPrefixJoin
 import graft.queries.TextQueries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The PPJoin prefix-filtered Jaccard join must produce EXACTLY the
@@ -54,5 +55,34 @@ class JaccardPrefixSpec extends AnyFunSuite with SparkTestBase {
         maxCandidatePairs = Long.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped === explicit && capped.nonEmpty)
+  }
+
+  test("similarPairs leaves the session's persisted RDDs and cache entries as it found them") {
+    import spark.implicits._
+    // docs 1 and 2 are near-duplicates (J = 4/5); doc 3 shares nothing
+    val sh = Seq((1L, "a"), (1L, "b"), (1L, "c"), (1L, "d"), (1L, "e"),
+        (2L, "a"), (2L, "b"), (2L, "c"), (2L, "d"), (3L, "x"), (3L, "y"))
+      .toDF("doc_id", "s")
+    val sc = spark.sparkContext
+    // lineage cuts (localCheckpoint) also mark their RDDs persisted;
+    // those blocks are the returned frame's own and are excluded
+    def persisted: Set[Int] = sc.getPersistentRDDs.values
+      .filterNot(_.isCheckpointed).map(_.id).toSet
+    val before = persisted
+    val pairs = JaccardPrefixJoin.similarPairs(sh, h64, num = 4, den = 5)
+    assert(pairs.select("doc_a", "doc_b").as[(Long, Long)].collect()
+      .toSeq === Seq((1L, 2L)))
+    assert((persisted -- before).isEmpty,
+      s"similarPairs left persisted RDDs behind: ${persisted -- before}")
+    assert(sh.storageLevel === StorageLevel.NONE,
+      "similarPairs left a cache entry for its input plan")
+    assert(pairs.count() === 1L, "the result must not read the released cache")
+    // a caller's own cache entry for the same plan survives the call
+    sh.persist()
+    try {
+      JaccardPrefixJoin.similarPairs(sh, h64, num = 4, den = 5).collect()
+      assert(sh.storageLevel !== StorageLevel.NONE,
+        "similarPairs dropped the caller's cache entry")
+    } finally sh.unpersist()
   }
 }

@@ -84,23 +84,25 @@ class KCoreSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("delta and full-recompute rounds produce identical results") {
-    // the r20 delta peel: under spark.graft.kcore.deltaMaxAlive the
-    // removed wave broadcasts and degrees are maintained by
+    // the r20 delta peel: while the alive set is under the broadcast
+    // bound the removed wave broadcasts and degrees are maintained by
     // subtraction; above it each round recomputes degrees from the
-    // edge list. Force the recompute branch (threshold 0) and prove
-    // both peel and coreNumbers return the same rows as the default
-    // delta branch on the cascade and a pseudo-random graph.
+    // edge list. Force the recompute branch (bound 0) and prove both
+    // peel and coreNumbers return the same rows as the default delta
+    // branch on the cascade and a pseudo-random graph.
     val edges = (0 until 150).map { i =>
       (s"n${i * 11 % 19}", s"n${(i * i + 5) % 19}")
     }.filter(e => e._1 != e._2)
     for (g <- Seq(cascade, edges)) {
-      val deltaPeel = run(g, 2)
-      val deltaCores = runCores(g)
-      spark.conf.set("spark.graft.kcore.deltaMaxAlive", "0")
-      try {
-        assert(run(g, 2) === deltaPeel)
-        assert(runCores(g) === deltaCores)
-      } finally spark.conf.unset("spark.graft.kcore.deltaMaxAlive")
+      val recomputePeel = KCore.peel(spark, g.toDF("src", "dst"), 2, 32,
+          deltaMaxAlive = 0L)
+        .as[(String, Long, Long)].collect()
+        .map(r => r._1 -> ((r._2, r._3))).toMap
+      assert(recomputePeel === run(g, 2))
+      val recomputeCores = KCore.coreNumbers(spark, g.toDF("src", "dst"),
+          64, deltaMaxAlive = 0L)
+        .as[(String, Long)].collect().toMap
+      assert(recomputeCores === runCores(g))
     }
   }
 
@@ -116,6 +118,14 @@ class KCoreSpec extends AnyFunSuite with SparkTestBase {
       KCore.peel(spark, withNull, 2, 4)
     }
     assert(e2.getMessage.contains("NULL"))
+    // NULL edges only: the canonical frame comes back empty, and the
+    // guard must still count what the raw feed held
+    val e3 = intercept[IllegalArgumentException] {
+      KCore.peel(spark, Seq((null: String, "b"), ("a", null: String))
+        .toDF("src", "dst"), 2, 4)
+    }
+    assert(e3.getMessage.contains("2 edges carry a NULL endpoint"),
+      e3.getMessage)
   }
 
   /** Core-number twin straight off the definition: c(v) = max k such

@@ -188,23 +188,6 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
     assert(PageRank.run(spark, healed, 2).count() === 3L)
   }
 
-  test("checkDangling=false: identical ranks on contracted feeds, documented leak otherwise") {
-    // the hot-loop escape hatch: on a sink-free graph it must be a pure
-    // guard skip — bit-identical ranks to the guarded run
-    val clean = Seq((1L, 2L), (2L, 3L), (3L, 1L))
-    assert(PageRank.run(spark, clean.toDF("src", "dst"), 3,
-        checkDangling = false).as[(Long, Long)].collect().toMap
-      === run(clean, 3))
-    // ...and on a dangling graph it RUNS, restoring the documented
-    // pre-guard failure mode: the sink gets no output row and its
-    // inbound mass leaks — this pin is what makes the flag's trade
-    // visible instead of folklore
-    val leaked = PageRank.run(spark, Seq((1L, 2L)).toDF("src", "dst"), 2,
-        checkDangling = false)
-      .as[(Long, Long)].collect().toMap
-    assert(leaked.keySet === Set(1L), "sink 2 must be absent (the leak)")
-  }
-
   test("dangling-redistribution face: in-memory twin, sinks keep rows, mass conserved") {
     // 1 -> 3, 2 -> 3: node 3 is a pure sink (the crawl-frontier shape).
     // Its mass must come back uniformly each round, not vanish.
