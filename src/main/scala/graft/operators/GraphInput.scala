@@ -1,8 +1,11 @@
 package graft.operators
 
 import graft.plans.Checkpoints
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The ONE input contract of the graph operators that read a (src, dst)
   * edge feed as a simple graph — [[KCore]], [[Triangles]], [[Hits]] and
@@ -26,17 +29,106 @@ import org.apache.spark.sql.functions._
   *  - SHARED FRAMES: the adjacency (both directions) and degree frames,
   *    lazy derivations over the pin that each caller cuts or pins as
   *    its loop needs.
+  *  - SIZE RULE ([[Pinned.onDriver]]): a graph whose pinned frame fits
+  *    `spark.sql.autoBroadcastJoinThreshold` (rows × schema.defaultSize,
+  *    the row count observed on the pin, so the test costs no job; a
+  *    threshold ≤ 0 never qualifies, Spark's meaning of -1) is
+  *    FINISHED ON THE DRIVER: the operator collects the pin once, runs
+  *    its fixed-round or peel loop in plain Scala over the same integer
+  *    arithmetic, and returns the rows as a local frame with the
+  *    distributed path's schema. A round of a distributed loop is a few
+  *    Spark jobs of fixed cost whatever the graph's size, so a
+  *    kilobyte graph paid tens of jobs for microseconds of arithmetic.
+  *    The rule is scale-neutral: the bound is the one Spark already
+  *    applies to every broadcast, and graphs above it keep the
+  *    distributed loops unchanged. The driver kernels key and order
+  *    nodes by their Catalyst values (UTF8String byte order for
+  *    strings, as Spark sorts), so tie-breaks and orientations match.
   *
   * [[PageRank]] keeps its own input path (multi-edges are WEIGHT there,
-  * so nothing is canonicalized away) and so does [[ConnectedComponents]]
-  * (an edgeless graph is legal input there).
+  * so nothing is canonicalized away) but reads the same size rule;
+  * [[ConnectedComponents]] keeps its own path (an edgeless graph is
+  * legal input there).
   */
 private[graft] object GraphInput {
 
-  /** The pinned input frame and its row count `m` (for the undirected
-    * form, the number of simple edges).
+  /** The input frame pinned on the caller's `chain`, its row count `m`
+    * (for the undirected form, the number of simple edges) and its node
+    * columns.
     */
-  final case class Pinned(edges: DataFrame, m: Long)
+  final case class Pinned(chain: Checkpoints.Chain, edges: DataFrame,
+                          m: Long, nodeCols: Seq[String]) {
+    /** The size rule (see the header): true when the operator should
+      * collect the pin and finish on the driver. The node columns must
+      * also share one type whose Catalyst values key and order as
+      * Spark's hash and sort do; any other graph stays distributed.
+      */
+    def onDriver: Boolean = {
+      val threshold = broadcastThresholdBytes(edges.sparkSession)
+      val nodeTypes = nodeCols.map(edges.schema(_).dataType).distinct
+      threshold > 0 &&
+        m <= threshold / math.max(1, edges.schema.defaultSize) &&
+        nodeTypes.size == 1 && keyable(nodeTypes.head)
+    }
+
+    /** The size rule's fork: `local` (a driver kernel, which collects
+      * what it reads before it returns; the chain is then reclaimed,
+      * as the result holds rows, not the pin) or `distributed` (which
+      * finishes the chain itself).
+      */
+    def finish(local: => DataFrame)(distributed: => DataFrame): DataFrame =
+      if (onDriver) {
+        val out = local
+        chain.reclaimAll()
+        out
+      } else distributed
+
+    /** The pin's rows, node columns as [[keyOrder]] keys. */
+    def collectKeyed(): Array[Array[Any]] =
+      GraphInput.collectKeyed(edges, nodeCols: _*)
+  }
+
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes
+    * (suffixed values like "10MB" accepted; -1 means disabled).
+    */
+  private[graft] def broadcastThresholdBytes(s: SparkSession): Long = {
+    val raw = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    try JavaUtils.byteStringAsBytes(raw)
+    catch { case _: NumberFormatException => raw.trim.toLong }
+  }
+
+  /** Node types whose Catalyst values have value equality and whose
+    * natural order is Spark's sort order.
+    */
+  private def keyable(t: DataType): Boolean = t match {
+    case StringType | ByteType | ShortType | IntegerType | LongType |
+         BooleanType | DateType | TimestampType | TimestampNTZType => true
+    case _ => false
+  }
+
+  /** Spark's order over node keys (UTF8String compares bytes). */
+  val keyOrder: Ordering[Any] =
+    (a: Any, b: Any) => a.asInstanceOf[Comparable[Any]].compareTo(b)
+
+  /** A driver kernel's result: `rows` (node keys first, then plain
+    * values) as a local frame under the schema `keys ++ rest`. The key
+    * fields are read off lazy plans over the pin, so their types and
+    * nullability are the distributed path's. One partition, as AQE
+    * leaves the distributed path's small result: a local frame would
+    * otherwise split into `defaultParallelism` partitions, and a writer
+    * into that many files.
+    */
+  def localResult(spark: SparkSession, keys: Seq[StructField],
+                  rest: Seq[StructField],
+                  rows: Iterable[Seq[Any]]): DataFrame = {
+    val value = keys.map(f =>
+      CatalystTypeConverters.createToScalaConverter(f.dataType))
+    val out = rows.map(r => Row.fromSeq(r.zipWithIndex.map {
+      case (x, i) => if (i < keys.size) value(i)(x) else x
+    }))
+    spark.createDataFrame(java.util.Arrays.asList(out.toSeq: _*),
+      StructType(keys ++ rest)).coalesce(1)
+  }
 
   /** The undirected simple-edge frame (u, v) with u < v: direction,
     * multi-edges and self-loops are normalization noise in link feeds
@@ -44,7 +136,7 @@ private[graft] object GraphInput {
     */
   def undirected(chain: Checkpoints.Chain, edges: DataFrame, who: String,
                  emptyAdvice: String, nullConsequence: String): Pinned =
-    pinGuarded(chain, edges, who, emptyAdvice, nullConsequence)(
+    pinGuarded(chain, edges, who, emptyAdvice, nullConsequence, "u", "v")(
       _.where(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("u"),
           greatest(col("src"), col("dst")).as("v"))
@@ -53,21 +145,20 @@ private[graft] object GraphInput {
   /** The directed distinct edge frame (src, dst). */
   def directed(chain: Checkpoints.Chain, edges: DataFrame, who: String,
                emptyAdvice: String, nullConsequence: String): Pinned =
-    pinGuarded(chain, edges, who, emptyAdvice, nullConsequence)(_.distinct())
+    pinGuarded(chain, edges, who, emptyAdvice, nullConsequence,
+      "src", "dst")(_.distinct())
 
   private def pinGuarded(chain: Checkpoints.Chain, edges: DataFrame,
                          who: String, emptyAdvice: String,
-                         nullConsequence: String)
+                         nullConsequence: String, nodeCols: String*)
                         (shape: DataFrame => DataFrame): Pinned = {
     val raw = edges.select(col("src"), col("dst"))
     val counts = Seq(count(lit(1)).as("n_all"),
       count(when(col("src").isNotNull && col("dst").isNotNull, 1))
         .as("n_ok"))
     val guard = Observation()
-    val size = Observation()
-    val pinned = chain.pin(
-      shape(raw.observe(guard, counts.head, counts.tail: _*))
-        .observe(size, count(lit(1)).as("m")))
+    val pinned = pinCounted(chain,
+      shape(raw.observe(guard, counts.head, counts.tail: _*)), nodeCols: _*)
     // AQE replaces a stage that comes back empty (a feed of self-loops
     // or NULL edges only) by an empty relation, and the observation
     // beneath it never reports; only then the counts cost a pass
@@ -82,7 +173,41 @@ private[graft] object GraphInput {
     require(nOk == nAll,
       s"$who: ${nAll - nOk} edges carry a NULL endpoint — " +
         s"$nullConsequence; repair the edge feed")
-    Pinned(pinned, size.get("m").asInstanceOf[Long])
+    pinned
+  }
+
+  /** Pin `frame` on `chain` with its row count riding the pin's
+    * materialization as an Observation (an empty frame whose stage AQE
+    * elided reports nothing: 0 rows).
+    */
+  def pinCounted(chain: Checkpoints.Chain, frame: DataFrame,
+                 nodeCols: String*): Pinned = {
+    val size = Observation()
+    val pinned = chain.pin(frame.observe(size, count(lit(1)).as("m")))
+    Pinned(chain, pinned, size.get.getOrElse("m", 0L).asInstanceOf[Long],
+      nodeCols)
+  }
+
+  /** `frame`'s rows for a driver kernel, the `nodeCols` as their
+    * Catalyst values (see [[keyOrder]]), other columns as collected.
+    */
+  def collectKeyed(frame: DataFrame, nodeCols: String*): Array[Array[Any]] = {
+    val key = CatalystTypeConverters.createToCatalystConverter(
+      frame.schema(nodeCols.head).dataType)
+    val at = frame.schema.fieldNames.map(nodeCols.contains(_))
+    frame.collect().map(r => Array.tabulate[Any](r.length)(i =>
+      if (at(i)) key(r.get(i)) else r.get(i)))
+  }
+
+  /** The undirected pin on the driver: each node's neighbor keys. */
+  def localNeighbors(canon: Pinned): Map[Any, Array[Any]] = {
+    val nbrs = scala.collection.mutable.HashMap
+      .empty[Any, scala.collection.mutable.ArrayBuffer[Any]]
+    canon.collectKeyed().foreach { e =>
+      nbrs.getOrElseUpdate(e(0), scala.collection.mutable.ArrayBuffer()) += e(1)
+      nbrs.getOrElseUpdate(e(1), scala.collection.mutable.ArrayBuffer()) += e(0)
+    }
+    nbrs.view.mapValues(_.toArray).toMap
   }
 
   /** (node, nbr) in both directions — a map-only union over the

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** Fixed-iteration HITS (Kleinberg 1999) — the second classic link-
   * analysis signal beside [[PageRank]]: a node is a good HUB if it
@@ -29,7 +30,10 @@ import org.apache.spark.sql.functions._
   * 1-row max aggregate cross-joined back (never a driver collect); the
   * score frame is |V| rows, localCheckpointed per round to keep the
   * loop's lineage flat (reliable checkpoint on a real cluster). The
-  * edge list is pinned once ([[GraphInput]]).
+  * edge list is pinned once ([[GraphInput]]). A graph whose pin fits
+  * `spark.sql.autoBroadcastJoinThreshold` ([[GraphInput]]'s size rule)
+  * runs the same rounds on the driver over the collected edges; larger
+  * graphs keep the distributed loop.
   */
 object Hits {
 
@@ -42,10 +46,17 @@ object Hits {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val chain = graft.plans.Checkpoints.chain() // reliable-policy file GC
     // the directed distinct edge list, pinned: every round reads it
-    val e = GraphInput.directed(chain, edges, "Hits",
+    val pinned = GraphInput.directed(chain, edges, "Hits",
       "an empty graph has no edges to score; land edges before scoring",
       "their hub/authority mass would silently vanish from the score " +
-        "joins").edges
+        "joins")
+    pinned.finish(runLocal(spark, pinned, iters))(
+      runPinned(chain, pinned.edges, iters))
+  }
+
+  /** The distributed loop over the pinned distinct edges `e`. */
+  private def runPinned(chain: graft.plans.Checkpoints.Chain, e: DataFrame,
+                        iters: Int): DataFrame = {
     // PINNED: every round (and the final join) reads the node spine
     val nodes = chain.pin(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
@@ -87,5 +98,35 @@ object Hits {
     chain.sealIfReliable(nodes.select(col("node"))
       .join(hubs.select(col("node"), col("s").as("hub_scaled")), "node")
       .join(auths.select(col("node"), col("s").as("auth_scaled")), "node"))
+  }
+
+  /** [[run]] on the driver over the collected distinct edges: the
+    * same half-rounds, each rescaled by the max over EVERY node
+    * (zero-score nodes included, as the distributed left join keeps
+    * them).
+    */
+  private def runLocal(spark: SparkSession, pinned: GraphInput.Pinned,
+                       iters: Int): DataFrame = {
+    val edges = pinned.collectKeyed()
+    val nodes = (edges.map(_(0)) ++ edges.map(_(1))).distinct
+    def summed(from: Int, to: Int, score: Map[Any, Long]): Map[Any, Long] = {
+      val s = scala.collection.mutable.HashMap.empty[Any, Long]
+      edges.foreach(x => s(x(to)) = s.getOrElse(x(to), 0L) + score(x(from)))
+      val d = nodes.map(s.getOrElse(_, 0L)).max / 1000L + 1L
+      nodes.map(v => v -> s.getOrElse(v, 0L) / d).toMap
+    }
+    var hubs = nodes.map(_ -> 1000L).toMap
+    var auths = Map.empty[Any, Long]
+    (1 to iters).foreach { _ =>
+      auths = summed(0, 1, hubs)
+      hubs = summed(1, 0, auths)
+    }
+    val e = pinned.edges
+    val node = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).schema("node")
+    GraphInput.localResult(spark, Seq(node),
+      Seq(StructField("hub_scaled", LongType),
+        StructField("auth_scaled", LongType)),
+      nodes.map(v => Seq(v, hubs(v), auths(v))))
   }
 }

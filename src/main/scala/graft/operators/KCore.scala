@@ -3,6 +3,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** Fixed-k core decomposition (Seidman 1983 "Network structure and
   * minimum degree") by synchronous peeling: repeatedly delete every
@@ -38,7 +39,12 @@ import org.apache.spark.sql.functions._
   * frame is localCheckpointed per round to keep the loop's lineage
   * flat (reliable checkpoint on a real cluster). For the FULL
   * core-number decomposition, [[coreNumbers]] amortizes the same
-  * delta rounds over every k.
+  * delta rounds over every k. A graph whose pin fits
+  * `spark.sql.autoBroadcastJoinThreshold` ([[GraphInput]]'s size rule)
+  * peels on the driver over the collected neighbor lists, counting
+  * rounds (ladder jumps included) exactly as the distributed loop does,
+  * so the same `maxRounds` refuses with the same message; larger
+  * graphs keep the distributed loop.
   *
   * Determinism: the peel is a monotone set fixpoint — no ordering, no
   * floats — so any engine running the same rounds produces the same
@@ -137,10 +143,17 @@ object KCore {
     require(k >= 1, s"KCore: k must be >= 1, got $k")
     require(maxRounds >= 1, s"KCore: maxRounds must be >= 1, got $maxRounds")
     val chain = graft.plans.Checkpoints.chain() // reliable-policy file GC
-    val canon = GraphInput.undirected(chain, edges, "KCore",
+    val pinned = GraphInput.undirected(chain, edges, "KCore",
       "land edges before peeling",
       "a null edge silently deflates its partner's degree and over-peels")
-      .edges
+    pinned.finish(peelLocal(spark, pinned, k, maxRounds))(
+      peelPinned(chain, pinned.edges, k, maxRounds, deltaMaxAlive))
+  }
+
+  /** The distributed peel over the pinned canonical edges. */
+  private def peelPinned(chain: graft.plans.Checkpoints.Chain,
+                         canon: DataFrame, k: Int, maxRounds: Int,
+                         deltaMaxAlive: Long): DataFrame = {
     // full-graph degrees need no aliveness filter — one direct
     // aggregate over the canonical edge endpoints. PINNED: the final
     // join reads it after the last peel round. The initial node count
@@ -163,10 +176,7 @@ object KCore {
     var round = 0
     while (aliveN != 0L && belowN != 0L) {
       round += 1
-      require(round <= maxRounds,
-        s"KCore: no fixpoint after $maxRounds peel rounds " +
-          s"($aliveN nodes still alive) — a capped result would be a " +
-          "SUPERSET of the k-core; raise maxRounds for this cascade")
+      require(round <= maxRounds, noFixpoint(maxRounds, aliveN))
       // one job per round: the survivor count rides the checkpoint
       // materialization as an Observation instead of a second action
       val obs = org.apache.spark.sql.Observation()
@@ -227,10 +237,18 @@ object KCore {
     require(maxRounds >= 1,
       s"KCore: maxRounds must be >= 1, got $maxRounds")
     val chain = graft.plans.Checkpoints.chain() // reliable-policy file GC
-    val canon = GraphInput.undirected(chain, edges, "KCore",
+    val pinned = GraphInput.undirected(chain, edges, "KCore",
       "land edges before decomposing",
       "a null edge silently deflates its partner's degree and " +
-        "mislabels core numbers").edges
+        "mislabels core numbers")
+    pinned.finish(coreNumbersLocal(spark, pinned, maxRounds))(
+      coreNumbersPinned(chain, pinned.edges, maxRounds, deltaMaxAlive))
+  }
+
+  /** The distributed core ladder over the pinned canonical edges. */
+  private def coreNumbersPinned(chain: graft.plans.Checkpoints.Chain,
+                                canon: DataFrame, maxRounds: Int,
+                                deltaMaxAlive: Long): DataFrame = {
     // the delta-peel frame (node, deg-among-frame - see [[peel]]'s
     // scale notes): the ladder starts from the full degree frame
     // directly (the old shape cut a node-only frame and paid a full
@@ -251,11 +269,7 @@ object KCore {
     val assigned = Vector.newBuilder[DataFrame]
     while (nSurv > 0L) {
       round += 1
-      require(round <= maxRounds,
-        s"KCore: core decomposition not finished after $maxRounds " +
-          s"rounds ($nSurv nodes unassigned at k=$k) - a capped run " +
-          "would mislabel every unassigned node's core; raise " +
-          "maxRounds for this cascade")
+      require(round <= maxRounds, unfinished(maxRounds, nSurv, k))
       val obs = org.apache.spark.sql.Observation()
       if (mind >= k) {
         // nothing below k: the survivor set IS the k-core - and the
@@ -310,5 +324,82 @@ object KCore {
     // seal: the final cut this ladder always had, now also reclaiming
     // every rung's pinned + windowed files under the reliable policy
     else chain.seal(frames.reduce(_ unionAll _))
+  }
+
+  private def noFixpoint(maxRounds: Int, alive: Long): String =
+    s"KCore: no fixpoint after $maxRounds peel rounds " +
+      s"($alive nodes still alive) — a capped result would be a " +
+      "SUPERSET of the k-core; raise maxRounds for this cascade"
+
+  private def unfinished(maxRounds: Int, unassigned: Long, k: Int): String =
+    s"KCore: core decomposition not finished after $maxRounds " +
+      s"rounds ($unassigned nodes unassigned at k=$k) - a capped run " +
+      "would mislabel every unassigned node's core; raise " +
+      "maxRounds for this cascade"
+
+  /** The node column of both faces' results (type and nullability of
+    * the distributed degree frame's).
+    */
+  private def nodeField(canon: DataFrame): StructField =
+    GraphInput.adjacency(canon).schema("node")
+
+  /** One synchronous peel round on the driver over (node -> degree
+    * among the frame): keepers minus their removed-neighbor counts —
+    * [[deltaRound]]'s arithmetic.
+    */
+  private def localRound(nbrs: Map[Any, Array[Any]], frame: Map[Any, Long],
+                         keep: Long => Boolean): Map[Any, Long] = {
+    val dec = scala.collection.mutable.HashMap.empty[Any, Long]
+    frame.foreach { case (v, d) =>
+      if (!keep(d)) nbrs(v).foreach(n => dec(n) = dec.getOrElse(n, 0L) + 1L)
+    }
+    frame.collect { case (v, d) if keep(d) => v -> (d - dec.getOrElse(v, 0L)) }
+  }
+
+  /** [[peel]] on the driver: the distributed loop's rounds, guard and
+    * message over the collected neighbor lists.
+    */
+  private def peelLocal(spark: SparkSession, canon: GraphInput.Pinned,
+                        k: Int, maxRounds: Int): DataFrame = {
+    val nbrs = GraphInput.localNeighbors(canon)
+    val degFull = nbrs.view.mapValues(_.length.toLong).toMap
+    var survivors = degFull
+    var round = 0
+    while (survivors.nonEmpty && survivors.values.exists(_ < k)) {
+      round += 1
+      require(round <= maxRounds, noFixpoint(maxRounds, survivors.size))
+      survivors = localRound(nbrs, survivors, _ >= k)
+    }
+    GraphInput.localResult(spark, Seq(nodeField(canon.edges)),
+      Seq(StructField("deg_full", LongType, nullable = false),
+        StructField("deg_core", LongType, nullable = false)),
+      survivors.map { case (v, d) => Seq(v, degFull(v), d) })
+  }
+
+  /** [[coreNumbers]] on the driver: the same ladder — jump rungs
+    * included — counted and refused as the distributed loop does.
+    */
+  private def coreNumbersLocal(spark: SparkSession, canon: GraphInput.Pinned,
+                               maxRounds: Int): DataFrame = {
+    val nbrs = GraphInput.localNeighbors(canon)
+    var frame = nbrs.view.mapValues(_.length.toLong).toMap
+    val assigned = Vector.newBuilder[Seq[Any]]
+    var k = 1L
+    var round = 0
+    while (frame.nonEmpty) {
+      round += 1
+      require(round <= maxRounds, unfinished(maxRounds, frame.size, k.toInt))
+      val mind = frame.values.min
+      // a jump rung (nothing below k) assigns the min-degree level and
+      // climbs to mind + 1; a peel rung assigns everything below k
+      val (leaves, core) = if (mind >= k) (mind, mind) else (k - 1, k - 1)
+      assigned ++= frame.collect {
+        case (v, d) if d <= leaves => Seq(v, core)
+      }
+      frame = localRound(nbrs, frame, _ > leaves)
+      if (mind >= k) k = mind + 1
+    }
+    GraphInput.localResult(spark, Seq(nodeField(canon.edges)),
+      Seq(StructField("core", LongType, nullable = false)), assigned.result())
   }
 }

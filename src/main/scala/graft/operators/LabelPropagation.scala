@@ -29,7 +29,11 @@ import org.apache.spark.sql.functions._
   * partition is bounded by the node's distinct neighbor-label count —
   * never a global or corpus-sized sort. Labels are lineage-cut per
   * round (graft.plans.Checkpoints — localCheckpoint by default,
-  * reliable checkpoint under spark.graft.checkpoint.dir).
+  * reliable checkpoint under spark.graft.checkpoint.dir). A graph
+  * whose pin fits `spark.sql.autoBroadcastJoinThreshold`
+  * ([[GraphInput]]'s size rule) runs [[run]]'s rounds on the driver
+  * over the collected neighbor lists, ties broken in Spark's order of
+  * the label type; larger graphs keep the distributed loop.
   * Input tolerance and guards are [[GraphInput]]'s, as in
   * [[Triangles.localCounts]].
   */
@@ -77,10 +81,18 @@ object LabelPropagation {
   def run(spark: SparkSession, edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"LabelPropagation: rounds must be >= 1, got $rounds")
     val chain = Checkpoints.chain() // reliable-policy file GC
-    // read every round: a map-only derivation over the pinned canon
-    val adj = GraphInput.adjacency(GraphInput.undirected(chain, edges,
+    val pinned = GraphInput.undirected(chain, edges,
       "LabelPropagation", "land edges before labeling",
-      "their votes would silently vanish from every neighborhood").edges)
+      "their votes would silently vanish from every neighborhood")
+    pinned.finish(runLocal(spark, pinned, rounds))(
+      runPinned(chain, pinned.edges, rounds))
+  }
+
+  /** The distributed rounds over the pinned canonical edges. */
+  private def runPinned(chain: Checkpoints.Chain, canon: DataFrame,
+                        rounds: Int): DataFrame = {
+    // read every round: a map-only derivation over the pinned canon
+    val adj = GraphInput.adjacency(canon)
     var labels = adj.select(col("node")).distinct()
       .select(col("node"), col("node").as("community"))
     val byVote = Window.partitionBy(col("node"))
@@ -105,6 +117,27 @@ object LabelPropagation {
         labels = chain.cut(labels)
     }
     chain.sealIfReliable(labels)
+  }
+
+  /** [[run]] on the driver: every node adopts its neighbors' most
+    * frequent label, ties to the smallest in Spark's order.
+    */
+  private def runLocal(spark: SparkSession, canon: GraphInput.Pinned,
+                       rounds: Int): DataFrame = {
+    val nbrs = GraphInput.localNeighbors(canon)
+    var labels: Map[Any, Any] = nbrs.map { case (v, _) => v -> v }
+    (1 to rounds).foreach { _ =>
+      labels = nbrs.map { case (v, ns) =>
+        val votes = ns.groupMapReduce(labels)(_ => 1L)(_ + _)
+        val top = votes.values.max
+        v -> votes.collect { case (l, c) if c == top => l }
+          .min(GraphInput.keyOrder)
+      }
+    }
+    val node = GraphInput.adjacency(canon.edges).schema("node")
+    GraphInput.localResult(spark,
+      Seq(node, node.copy(name = "community")), Nil,
+      labels.map { case (v, l) => Seq(v, l) })
   }
 
   /** One synchronous MODULARITY local-move round — Louvain's move

@@ -1,8 +1,9 @@
 package graft.operators
 
+import graft.plans.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** Fixed-iteration PageRank in pure integer arithmetic — the link-
   * quality weighting a pretraining pipeline applies to a crawl's host
@@ -47,7 +48,7 @@ import org.apache.spark.sql.types.LongType
   * `dst` would receive rank whose onward mass silently vanishes — the
   * loop's spine is built from `src` nodes, so the sink would not even
   * get an output row — so every face FAILS LOUDLY on such nodes (one
-  * metadata-plane anti-join on the persisted edge frame, naming
+  * metadata-plane anti-join on the pinned edge frame, naming
   * offenders). Callers with genuinely dangling graphs either add
   * self-loops / back-edges upstream, or redistribute dangling mass
   * before calling (the classic fix is dst → every node, which is a
@@ -58,9 +59,18 @@ import org.apache.spark.sql.types.LongType
   * the rank frame on `src` and ONE aggregation on `dst` — both key
   * shuffles of the edge list; the rank frame is |V| rows (≪ |E|) and is
   * `localCheckpoint`ed per round so the loop's lineage stays flat (use
-  * a reliable checkpoint dir on a real cluster). The edge list is
-  * weight-annotated ONCE and persisted; the driver holds only the node
-  * count (one metadata-plane scalar).
+  * a reliable checkpoint dir on a real cluster). The weighted edge list
+  * is pinned ONCE on the call's Checkpoints chain (a cut of the call's
+  * own RDD, never a CacheManager entry that a concurrent refresh over
+  * the same feed could share and drop), and each node's out-weight
+  * total rides the |V|-row rank frame, so the round's one edge join
+  * brings both r and totw; the driver holds only the node count (one
+  * metadata-plane scalar). A graph whose pinned edge frame fits
+  * `spark.sql.autoBroadcastJoinThreshold` ([[GraphInput]]'s size rule,
+  * read off the pin's observed row count) runs the rounds on the
+  * driver over the collected edges — the same per-edge
+  * `(r*w) div totw` shares and per-round literals — and larger graphs
+  * keep the distributed loops.
   */
 object PageRank {
 
@@ -88,40 +98,103 @@ object PageRank {
     */
   private[operators] val CutStride = 8
 
-  /** The shared iteration core. `ewt` must carry (src, dst, w, totw)
-    * and be persisted by the caller; `init` carries one row per node
-    * with its teleport term and initial rank.
+  /** The shared iteration core. `ewt` is the pinned (src, dst, w)
+    * frame, whose chain this loop finishes; `init` carries one row per
+    * node with its teleport term, initial rank and out-weight total
+    * (node, tp, r0, totw).
     */
-  private def loop(ewt: DataFrame, init: DataFrame, iters: Int): DataFrame = {
-    val chain = graft.plans.Checkpoints.chain() // reliable-policy file GC
-    // The node spine: every node. Each round's aggregation only yields
-    // rows for nodes with IN-edges; left-joining the shares back onto
-    // the spine keeps zero-in-degree nodes (out-edges only — ubiquitous
-    // in crawl graphs) in the frame at rank = teleport, so their
-    // outgoing contributions survive into the next round instead of
-    // silently vanishing. PINNED: every round joins against it.
-    val spine = chain.pin(init)
-    var ranks = spine.select(col("node"), col("r0").as("r"))
-    (1 to iters).foreach { i =>
-      val next = spine.join(
-          ewt.join(ranks, ewt("src") === ranks("node"))
-            .select(col("dst"), expr("(r * w) div totw").as("share"))
-            .groupBy(col("dst").as("node"))
-            .agg(sum(col("share")).as("s")), Seq("node"), "left")
-        .select(col("node"),
-          (col("tp") + expr("(85 * coalesce(s, 0L)) div 100")).as("r"))
-      // the LAST round always cuts: the returned frame must be a
-      // zero-exchange read of the materialized fixpoint (the registered
-      // rows' memo/probe contract, pinned by PlanRegressionSpec)
-      ranks = if (i == iters || i % CutStride == 0) chain.cut(next) else next
+  private def loop(ewt: GraphInput.Pinned, init: DataFrame,
+                   iters: Int): DataFrame =
+    ewt.finish {
+      val edges = ewt.collectKeyed()
+      val spine = GraphInput.collectKeyed(init, "node")
+      def column(i: Int) =
+        spine.map(x => x(0) -> x(i).asInstanceOf[Long]).toMap
+      val (tp, totw) = (column(1), column(3))
+      var r = column(2)
+      (1 to iters).foreach { _ =>
+        val s = localShares(edges, r, totw)
+        r = tp.map { case (v, t) =>
+          v -> (t + 85L * s.getOrElse(v, 0L) / 100L)
+        }
+      }
+      localRanks(init, r)
+    } {
+      // The node spine: every node. Each round's aggregation only
+      // yields rows for nodes with IN-edges; left-joining the shares
+      // back onto the spine keeps zero-in-degree nodes (out-edges only
+      // — ubiquitous in crawl graphs) in the frame at rank = teleport,
+      // so their outgoing contributions survive into the next round
+      // instead of silently vanishing. PINNED: every round joins
+      // against it.
+      val chain = ewt.chain
+      val spine = chain.pin(init)
+      val e = ewt.edges
+      var ranks = spine.select(col("node"), col("r0").as("r"), col("totw"))
+      (1 to iters).foreach { i =>
+        val next = spine.join(
+            e.join(ranks, e("src") === ranks("node"))
+              .select(col("dst"), expr("(r * w) div totw").as("share"))
+              .groupBy(col("dst").as("node"))
+              .agg(sum(col("share")).as("s")), Seq("node"), "left")
+          .select(col("node"),
+            (col("tp") + expr("(85 * coalesce(s, 0L)) div 100")).as("r"),
+            col("totw"))
+        // the LAST round always cuts: the returned frame must be a
+        // zero-exchange read of the materialized fixpoint (the
+        // registered rows' memo/probe contract, pinned by
+        // PlanRegressionSpec)
+        ranks = if (i == iters || i % CutStride == 0) chain.cut(next) else next
+      }
+      chain.sealIfReliable(
+        ranks.select(col("node"), col("r").as("rank_scaled")))
     }
-    chain.sealIfReliable(ranks.select(col("node"), col("r").as("rank_scaled")))
+
+  /** One round's shares on the driver: Σ over each node's in-edges of
+    * `(r(src) * w) div totw(src)`, edges whose src has no rank skipped
+    * (the distributed inner join).
+    */
+  private def localShares(edges: Array[Array[Any]], r: Map[Any, Long],
+                          totw: Map[Any, Long]): Map[Any, Long] = {
+    val s = scala.collection.mutable.HashMap.empty[Any, Long]
+    edges.foreach { x =>
+      r.get(x(0)).foreach { rank =>
+        s(x(1)) = s.getOrElse(x(1), 0L) +
+          rank * x(2).asInstanceOf[Long] / totw(x(0))
+      }
+    }
+    s.toMap
   }
+
+  /** Driver ranks as the (node, rank_scaled) result, the node column
+    * typed as `nodes`' `node`.
+    */
+  private def localRanks(nodes: DataFrame, r: Map[Any, Long]): DataFrame =
+    GraphInput.localResult(nodes.sparkSession, Seq(nodes.schema("node")),
+      Seq(StructField("rank_scaled", LongType)),
+      r.map { case (v, x) => Seq(v, x) })
+
+  /** The weighted edge frame (src, dst, w) — w per edge, uniform
+    * lit(1) for the classic form — pinned on `chain` with its row count
+    * observed for the size rule. An edge with a NULL src matches no
+    * rank row, so it carries no rank and is dropped here.
+    */
+  private def pinWeighted(chain: Checkpoints.Chain, edges: DataFrame,
+                          w: Column): GraphInput.Pinned =
+    GraphInput.pinCounted(chain, edges.where(col("src").isNotNull)
+      .select(col("src"), col("dst"), w.cast(LongType).as("w")), "src", "dst")
+
+  /** (node, totw): every src with the total weight of its out-edges,
+    * the divisor of its per-edge shares. The rank frame carries it, so
+    * a round's one edge join brings both r and totw.
+    */
+  private def outWeights(ewt: DataFrame): DataFrame =
+    ewt.groupBy(col("src").as("node")).agg(sum(col("w")).as("totw"))
 
   /** Loud dangling-node guard (header contract): any node appearing as
     * `dst` but never as `src` fails the run, naming up to five
     * offenders. One metadata-plane job — two distincts + an anti-join
-    * on the already-persisted edge frame, collecting at most six rows.
+    * on the already-pinned edge frame, collecting at most six rows.
     */
   private def requireNoDangling(ewt: DataFrame): Unit = {
     val offenders = ewt.select(col("dst"))
@@ -140,17 +213,6 @@ object PageRank {
     }
   }
 
-  /** Weight-annotate an edge list: w per edge (uniform lit(1) for the
-    * classic form), totw = Σw per src.
-    */
-  private def annotate(edges: DataFrame, w: Column): DataFrame = {
-    val weighted = edges.select(col("src"), col("dst"),
-      w.cast(LongType).as("w"))
-    val tot = weighted.groupBy(col("src").as("node"))
-      .agg(sum(col("w")).as("totw"))
-    weighted.join(tot.select(col("node").as("src"), col("totw")), "src")
-  }
-
   /** @param edges  columns `src`, `dst` (node ids); every node
     *               referenced must appear as a `src` at least once
     * @param iters  fixed iteration count (both engines unroll the same K)
@@ -160,17 +222,16 @@ object PageRank {
     */
   def run(spark: SparkSession, edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val ewt = annotate(edges, lit(1L)).persist() // reused every round
-    try {
-      requireNoDangling(ewt)
-      val nodes = ewt.select(col("src").as("node")).distinct()
-      val n = nodes.count() // ONE driver scalar: |V|
-      require(n > 0, "PageRank: empty graph")
-      val r0 = Scale / n
-      val tp = 15L * r0 / 100L
-      loop(ewt, nodes.select(col("node"), lit(tp).as("tp"),
-        lit(r0).as("r0")), iters)
-    } finally ewt.unpersist()
+    val chain = Checkpoints.chain() // reliable-policy file GC
+    val ewt = pinWeighted(chain, edges, lit(1L)) // read every round
+    requireNoDangling(ewt.edges)
+    val nodes = outWeights(ewt.edges)
+    val n = nodes.count() // ONE driver scalar: |V|
+    require(n > 0, "PageRank: empty graph")
+    val r0 = Scale / n
+    val tp = 15L * r0 / 100L
+    loop(ewt, nodes.select(col("node"), lit(tp).as("tp"),
+      lit(r0).as("r0"), col("totw")), iters)
   }
 
   /** Weighted form: `edges` carries a positive integer weight column
@@ -178,37 +239,36 @@ object PageRank {
     * crawl graph provides); a node's rank splits proportionally,
     * share(u→v) = (r(u)·w(u,v)) div (Σ_x w(u,x)). Weights are loudly
     * bounded by [[MaxWeight]] (one metadata-plane aggregate on the
-    * persisted frame) so the BIGINT product cannot wrap.
+    * pinned frame) so the BIGINT product cannot wrap.
     */
   def runWeighted(spark: SparkSession, edges: DataFrame,
                   iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val ewt = annotate(edges, col("w")).persist()
-    try {
-      // one metadata-plane aggregate covers every guard: emptiness,
-      // NULL weights (min/max SKIP nulls, so a null-weighted edge would
-      // otherwise pass the bounds checks and then silently drop its
-      // rank mass in the loop), positivity, and the overflow cap
-      val b = ewt.agg(count(lit(1)), count(col("w")),
-        min(col("w")), max(col("w"))).head()
-      val total = b.getLong(0)
-      require(total > 0, "PageRank: empty graph")
-      require(b.getLong(1) == total,
-        s"PageRank.runWeighted: ${total - b.getLong(1)} edges carry a " +
-          "NULL weight — their rank mass would silently vanish")
-      require(b.getLong(2) >= 1L,
-        "PageRank.runWeighted: weights must be positive")
-      require(b.getLong(3) <= MaxWeight,
-        s"PageRank.runWeighted: max weight ${b.getLong(3)} exceeds " +
-          s"$MaxWeight — r*w would overflow the integer lattice")
-      requireNoDangling(ewt)
-      val nodes = ewt.select(col("src").as("node")).distinct()
-      val n = nodes.count()
-      val r0 = Scale / n
-      val tp = 15L * r0 / 100L
-      loop(ewt, nodes.select(col("node"), lit(tp).as("tp"),
-        lit(r0).as("r0")), iters)
-    } finally ewt.unpersist()
+    val chain = Checkpoints.chain() // reliable-policy file GC
+    val ewt = pinWeighted(chain, edges, col("w"))
+    // one metadata-plane aggregate covers every guard: emptiness,
+    // NULL weights (min/max SKIP nulls, so a null-weighted edge would
+    // otherwise pass the bounds checks and then silently drop its
+    // rank mass in the loop), positivity, and the overflow cap
+    val b = ewt.edges.agg(count(lit(1)), count(col("w")),
+      min(col("w")), max(col("w"))).head()
+    val total = b.getLong(0)
+    require(total > 0, "PageRank: empty graph")
+    require(b.getLong(1) == total,
+      s"PageRank.runWeighted: ${total - b.getLong(1)} edges carry a " +
+        "NULL weight — their rank mass would silently vanish")
+    require(b.getLong(2) >= 1L,
+      "PageRank.runWeighted: weights must be positive")
+    require(b.getLong(3) <= MaxWeight,
+      s"PageRank.runWeighted: max weight ${b.getLong(3)} exceeds " +
+        s"$MaxWeight — r*w would overflow the integer lattice")
+    requireNoDangling(ewt.edges)
+    val nodes = outWeights(ewt.edges)
+    val n = nodes.count()
+    val r0 = Scale / n
+    val tp = 15L * r0 / 100L
+    loop(ewt, nodes.select(col("node"), lit(tp).as("tp"),
+      lit(r0).as("r0"), col("totw")), iters)
   }
 
   /** Dangling-tolerant form — the redistribution face the loud guard
@@ -230,31 +290,50 @@ object PageRank {
   def runDanglingRedistributed(spark: SparkSession, edges: DataFrame,
                                iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val ewt = annotate(edges, lit(1L)).persist()
-    try {
-      // node set from the PERSISTED ewt, not the raw argument — the
-      // raw frame would re-run the caller's edge derivation twice
-      // (once per action) instead of reading the cache
-      val nodes = ewt.select(col("src").as("node"))
-        .union(ewt.select(col("dst").as("node"))).distinct()
+    val chain = Checkpoints.chain() // reliable-policy file GC
+    val pinned = pinWeighted(chain, edges, lit(1L))
+    val ewt = pinned.edges
+    // node set from the PINNED ewt, not the raw argument — the raw
+    // frame would re-run the caller's edge derivation twice (once per
+    // action) instead of reading the pin
+    val nodes = ewt.select(col("src").as("node"))
+      .union(ewt.select(col("dst").as("node"))).distinct()
+    pinned.finish {
+      val e = pinned.collectKeyed()
+      val totw = e.groupMapReduce(_(0))(_(2).asInstanceOf[Long])(_ + _)
+      val hasOut = totw.keySet
+      val all = (e.map(_(0)) ++ e.map(_(1))).distinct
+      val n = all.length.toLong
+      require(n > 0, "PageRank: empty graph")
+      val r0 = Scale / n
+      val tp = 15L * r0 / 100L
+      var r = all.map(_ -> r0).toMap
+      var dm = all.count(!hasOut(_)) * r0
+      (1 to iters).foreach { _ =>
+        val s = localShares(e, r, totw)
+        val perNode = dm / n // the round's literal, as in the plan
+        r = all.map(v =>
+          v -> (tp + 85L * (s.getOrElse(v, 0L) + perNode) / 100L)).toMap
+        dm = all.filterNot(hasOut).map(r).sum
+      }
+      localRanks(nodes, r)
+    } {
       val n = nodes.count() // ONE driver scalar: |V| over src ∪ dst
       require(n > 0, "PageRank: empty graph")
       val r0 = Scale / n
       val tp = 15L * r0 / 100L
-      val chain = graft.plans.Checkpoints.chain() // reliable-policy file GC
       // the dangling-node count rides the spine pin (one action): round
       // 1's dangling mass is n_dang * r0 on the driver, and every later
       // round's rides its cut's Observation below (r21 — was a separate
       // 1-row aggregate subtree + crossJoin built into every round's
       // plan, i.e. one extra scan of the ranks cut per round)
       val obsSpine = org.apache.spark.sql.Observation()
-      val spine = chain.pin(nodes.join(
-          ewt.select(col("src").as("node")).distinct()
-            .withColumn("__o", lit(true)), Seq("node"), "left")
-        .select(col("node"), coalesce(col("__o"), lit(false)).as("has_out"))
+      val spine = chain.pin(nodes.join(outWeights(ewt), Seq("node"), "left")
+        .select(col("node"), col("totw").isNotNull.as("has_out"),
+          col("totw"))
         .observe(obsSpine,
           count(when(!col("has_out"), 1)).as("n_dang")))
-      var ranks = spine.select(col("node"), col("has_out"),
+      var ranks = spine.select(col("node"), col("has_out"), col("totw"),
         lit(r0).as("r"))
       var dm = obsSpine.get("n_dang").asInstanceOf[Long] * r0
       (1 to iters).foreach { i =>
@@ -265,7 +344,7 @@ object PageRank {
         // dm enters as a LITERAL (dm div n is the same truncating
         // nonnegative division on the driver as in-plan)
         val next = spine.join(shares, Seq("node"), "left")
-          .select(col("node"), col("has_out"),
+          .select(col("node"), col("has_out"), col("totw"),
             (lit(tp) +
               expr(s"(85 * (coalesce(s, 0L) + ${dm / n}L)) div 100"))
               .as("r"))
@@ -286,7 +365,7 @@ object PageRank {
       }
       chain.sealIfReliable(
         ranks.select(col("node"), col("r").as("rank_scaled")))
-    } finally ewt.unpersist()
+    }
   }
 
   /** Personalized (topic-sensitive) form: teleport mass goes ONLY to
@@ -299,20 +378,19 @@ object PageRank {
   def runPersonalized(spark: SparkSession, edges: DataFrame,
                       seeds: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val ewt = annotate(edges, lit(1L)).persist()
-    try {
-      requireNoDangling(ewt)
-      val nodes = ewt.select(col("src").as("node")).distinct()
-      val flagged = nodes.join(
-        seeds.select(col("node"), lit(true).as("__seed")).distinct(),
-        Seq("node"), "left")
-      val ns = flagged.where(col("__seed")).count() // metadata scalar
-      require(ns > 0, "PageRank.runPersonalized: no seed is in the graph")
-      val r0 = Scale / ns
-      val tp = 15L * r0 / 100L
-      loop(ewt, flagged.select(col("node"),
-        when(col("__seed"), tp).otherwise(0L).as("tp"),
-        when(col("__seed"), r0).otherwise(0L).as("r0")), iters)
-    } finally ewt.unpersist()
+    val chain = Checkpoints.chain() // reliable-policy file GC
+    val ewt = pinWeighted(chain, edges, lit(1L))
+    requireNoDangling(ewt.edges)
+    val nodes = outWeights(ewt.edges)
+    val flagged = nodes.join(
+      seeds.select(col("node"), lit(true).as("__seed")).distinct(),
+      Seq("node"), "left")
+    val ns = flagged.where(col("__seed")).count() // metadata scalar
+    require(ns > 0, "PageRank.runPersonalized: no seed is in the graph")
+    val r0 = Scale / ns
+    val tp = 15L * r0 / 100L
+    loop(ewt, flagged.select(col("node"),
+      when(col("__seed"), tp).otherwise(0L).as("tp"),
+      when(col("__seed"), r0).otherwise(0L).as("r0"), col("totw")), iters)
   }
 }

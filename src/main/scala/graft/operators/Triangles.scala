@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** Distributed triangle counting + local clustering coefficient over an
   * undirected simple graph — the community-density signal a crawl
@@ -28,7 +29,11 @@ import org.apache.spark.sql.functions._
   * reduce key: the wedge join key is the wedge center, whose fan-out
   * is the bounded out-degree. Every step is an equi-join or keyed
   * aggregate (shuffle-partitioned, map-side combinable); nothing is
-  * collected to the driver.
+  * collected to the driver — unless the pinned edge frame fits
+  * `spark.sql.autoBroadcastJoinThreshold` ([[GraphInput]]'s size
+  * rule): then the same orientation and wedge closing run on the
+  * driver over the collected edges, and larger graphs keep the
+  * distributed plan.
   *
   * Determinism: all outputs are exact BIGINT counts; the coefficient
   * is published on an integer ppm lattice via truncating division
@@ -52,10 +57,17 @@ object Triangles {
     */
   def localCounts(spark: SparkSession, edges: DataFrame): DataFrame = {
     val chain = graft.plans.Checkpoints.chain() // reliable-policy file GC
-    val canon = GraphInput.undirected(chain, edges, "Triangles",
+    val pinned = GraphInput.undirected(chain, edges, "Triangles",
       "land edges before counting",
       "they would silently drop from the canonical pair frame and " +
-        "undercount their partner's neighborhood").edges
+        "undercount their partner's neighborhood")
+    pinned.finish(localCountsLocal(spark, pinned))(
+      localCountsPinned(chain, pinned.edges))
+  }
+
+  /** The distributed count over the pinned canonical edges. */
+  private def localCountsPinned(chain: graft.plans.Checkpoints.Chain,
+                                canon: DataFrame): DataFrame = {
     // orient each edge from the (deg, node)-smaller endpoint to the
     // larger; carry the head's degree so wedges can order their legs
     // under the SAME total order without a re-join. Both frames stay
@@ -97,5 +109,35 @@ object Triangles {
           expr("(2 * coalesce(tri_cnt, 0L) * 1000000) " +
             "div (deg * (deg - 1))"))
           .otherwise(lit(0L)).as("lcc_ppm")))
+  }
+
+  /** [[localCounts]] on the driver: the same (deg, node) orientation —
+    * nodes ordered as Spark sorts them — and wedge closing over the
+    * collected neighbor lists.
+    */
+  private def localCountsLocal(spark: SparkSession,
+                               canon: GraphInput.Pinned): DataFrame = {
+    val nbrs = GraphInput.localNeighbors(canon)
+    val deg = nbrs.view.mapValues(_.length.toLong).toMap
+    def before(a: Any, b: Any): Boolean =
+      deg(a) < deg(b) || (deg(a) == deg(b) && GraphInput.keyOrder.lt(a, b))
+    val linked = nbrs.view.mapValues(_.toSet).toMap
+    val tri = scala.collection.mutable.HashMap.empty[Any, Long]
+    def bump(v: Any): Unit = tri(v) = tri.getOrElse(v, 0L) + 1L
+    nbrs.foreach { case (a, ns) =>
+      val out = ns.filter(before(a, _))
+      for (b1 <- out; b2 <- out if before(b1, b2) && linked(b1)(b2)) {
+        bump(a); bump(b1); bump(b2)
+      }
+    }
+    GraphInput.localResult(spark,
+      Seq(GraphInput.adjacency(canon.edges).schema("node")),
+      Seq(StructField("deg", LongType, nullable = false),
+        StructField("tri_cnt", LongType, nullable = false),
+        StructField("lcc_ppm", LongType)),
+      deg.map { case (v, d) =>
+        val t = tri.getOrElse(v, 0L)
+        Seq(v, d, t, if (d >= 2) 2L * t * 1000000L / (d * (d - 1)) else 0L)
+      })
   }
 }

@@ -1018,14 +1018,6 @@ object TextQueries extends QueryPack {
     */
   private[graft] val RetrievalQuerySample = 256
 
-  private def broadcastThresholdBytes(s: SparkSession): Long = {
-    val raw = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    // accepts "10MB"-style suffixed values; plain "-1" (disabled) falls
-    // through to toLong and correctly forces the bloom path
-    try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
-    catch { case _: NumberFormatException => raw.trim.toLong }
-  }
-
   /** The DecontamAuto discipline generalized to any small-side frame: an
     * explicit `broadcast()` hint OVERRIDES the session threshold, so a
     * hinted frame that scales with the corpus (e.g. a self-retrieval
@@ -1039,7 +1031,7 @@ object TextQueries extends QueryPack {
     */
   private[graft] def shipAuto(s: SparkSession, df: DataFrame,
                               estRows: Long, estRowBytes: Long): DataFrame = {
-    val thr = broadcastThresholdBytes(s)
+    val thr = graft.operators.GraphInput.broadcastThresholdBytes(s)
     if (thr > 0 && estRows * estRowBytes <= thr) broadcast(df) else df
   }
 
@@ -1101,7 +1093,7 @@ object TextQueries extends QueryPack {
       case DecontamAuto =>
         bench.persist() // one scan feeds the count and whichever branch wins
         val n = bench.count()
-        val thr = broadcastThresholdBytes(s)
+        val thr = graft.operators.GraphInput.broadcastThresholdBytes(s)
         if (thr > 0 && n * FpRowBytes <= thr) {
           bench.unpersist() // broadcast build re-derives it once, lazily
           broadcastOverlap

@@ -1533,11 +1533,17 @@ object Orchestrator {
       val audit =
         if (!WarehouseFs.exists(path)) None
         else Some(graft.sources.AppendLogLayout.read(spark, path))
-      val landed: Seq[String] = audit.toSeq.flatMap(
-        _.where(col("step") === "write"
-            && col("target") === inputTable
-            && col("status") === "SUCCESS")
-          .select("batchId").distinct().collect().map(_.getString(0)))
+      // ONE filtered read of the audit plane per cadence check; the
+      // three facts below fold from its rows on the driver
+      val rows = audit.toSeq.flatMap(_.where(col("status") === "SUCCESS" && (
+          (col("target") === inputTable
+            && col("step").isin("write", "ann_rebuild"))
+          || (col("step") === "mv_refresh" && col("target") === target
+            && col("message").startsWith("covers="))))
+        .select("step", "batchId", "message").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2))))
+      val landed: Seq[String] =
+        rows.collect { case ("write", b, _) => b }.distinct
       // a full REBUILD of the input table (ann_rebuild) rewrites every
       // row, so a dependent artifact is stale against the whole index —
       // but a rebuild retried under its ORIGINAL batch id would slip
@@ -1546,15 +1552,9 @@ object Orchestrator {
       // count is monotone even across same-id retries), carried in the
       // covers= stamp as `|rb=N`. Any uncovered rebuild makes the
       // refresh due immediately, bypassing `every`.
-      val rebuilds: Long = audit.map(
-        _.where(col("step") === "ann_rebuild"
-            && col("target") === inputTable
-            && col("status") === "SUCCESS").count()).getOrElse(0L)
-      val stamps: Seq[String] = audit.toSeq.flatMap(
-        _.where(col("step") === "mv_refresh" && col("target") === target
-            && col("status") === "SUCCESS"
-            && col("message").startsWith("covers="))
-          .select("message").collect().map(_.getString(0)))
+      val rebuilds: Long = rows.count(_._1 == "ann_rebuild").toLong
+      val stamps: Seq[String] =
+        rows.collect { case ("mv_refresh", _, m) => m }
       val covered: String = stamps
         .map(_.split("\\|")(0).stripPrefix("covers="))
         .maxOption.getOrElse("")

@@ -92,12 +92,19 @@ class CheckpointsSpec extends AnyFunSuite with SparkTestBase {
           s"(rounds reclaimed), found ${rddDirCount(dir)}")
 
       // the ladder form: pins (per-rung core frames) + window cuts,
-      // sealed behind the final union — same O(1) contract
-      val core = graft.operators.KCore
-        .coreNumbers(spark, pathSym, maxRounds = 50)
+      // sealed behind the final union — same O(1) contract. A graph
+      // this small finishes on the driver by default, so the
+      // distributed ladder is forced here
+      val core = onDistributedGraphPath(graft.operators.KCore
+        .coreNumbers(spark, pathSym, maxRounds = 50))
       assert(core.count() === 10L)
       assert(rddDirCount(dir) === 2, // minLabel's seal + coreNumbers' seal
         s"expected only the two sealed frames in $dir, found ${rddDirCount(dir)}")
+      // the driver path reclaims its pin and returns rows, not files
+      assert(graft.operators.KCore
+        .coreNumbers(spark, pathSym, maxRounds = 50).count() === 10L)
+      assert(rddDirCount(dir) === 2,
+        s"the driver path left files in $dir: ${rddDirCount(dir)}")
     } finally {
       spark.conf.unset(Checkpoints.DirConf)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))

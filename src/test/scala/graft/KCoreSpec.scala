@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** k-core peeling against an in-memory twin, the cascade behavior that
   * distinguishes it from a one-pass degree filter, and the loud-cap /
-  * guard contracts.
+  * guard contracts — each on both paths of [[GraphInput]]'s size rule
+  * (driver and, with broadcasts disabled, the distributed loops).
   */
 class KCoreSpec extends AnyFunSuite with SparkTestBase {
 
@@ -34,9 +35,9 @@ class KCoreSpec extends AnyFunSuite with SparkTestBase {
 
   private def run(edges: Seq[(String, String)], k: Int,
                   maxRounds: Int = 32): Map[String, (Long, Long)] =
-    KCore.peel(spark, edges.toDF("src", "dst"), k, maxRounds)
-      .as[(String, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3))).toMap
+    onBothGraphPaths(KCore.peel(spark, edges.toDF("src", "dst"), k, maxRounds))(
+      _.as[(String, Long, Long)].collect()
+        .map(r => r._1 -> ((r._2, r._3))).toMap)
 
   // 4-clique with a pendant path c-p1-p2-p3: at k=2 the path unravels
   // one node per round (3 rounds), each interior node holding degree 2
@@ -76,56 +77,61 @@ class KCoreSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("an unreachable fixpoint within maxRounds fails loudly") {
-    val e = intercept[IllegalArgumentException] {
-      run(cascade, 2, maxRounds = 2)
+    forEachGraphPath { path =>
+      val e = intercept[IllegalArgumentException] {
+        KCore.peel(spark, cascade.toDF("src", "dst"), 2, 2)
+      }
+      assert(e.getMessage.contains("SUPERSET"),
+        s"$path: the cap message must say why a capped result is unsafe")
     }
-    assert(e.getMessage.contains("SUPERSET"),
-      "the cap message must say why a capped result is unsafe")
   }
 
   test("delta and full-recompute rounds produce identical results") {
     // the r20 delta peel: while the alive set is under the broadcast
     // bound the removed wave broadcasts and degrees are maintained by
     // subtraction; above it each round recomputes degrees from the
-    // edge list. Force the recompute branch (bound 0) and prove both
-    // peel and coreNumbers return the same rows as the default delta
-    // branch on the cascade and a pseudo-random graph.
+    // edge list. Force the recompute branch (bound 0) of the
+    // distributed loop and prove both peel and coreNumbers return the
+    // same rows as the default delta branch (and the driver path) on
+    // the cascade and a pseudo-random graph.
     val edges = (0 until 150).map { i =>
       (s"n${i * 11 % 19}", s"n${(i * i + 5) % 19}")
     }.filter(e => e._1 != e._2)
     for (g <- Seq(cascade, edges)) {
-      val recomputePeel = KCore.peel(spark, g.toDF("src", "dst"), 2, 32,
-          deltaMaxAlive = 0L)
-        .as[(String, Long, Long)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
+      val recomputePeel = onDistributedGraphPath(
+        KCore.peel(spark, g.toDF("src", "dst"), 2, 32, deltaMaxAlive = 0L)
+          .as[(String, Long, Long)].collect()
+          .map(r => r._1 -> ((r._2, r._3))).toMap)
       assert(recomputePeel === run(g, 2))
-      val recomputeCores = KCore.coreNumbers(spark, g.toDF("src", "dst"),
-          64, deltaMaxAlive = 0L)
-        .as[(String, Long)].collect().toMap
+      val recomputeCores = onDistributedGraphPath(
+        KCore.coreNumbers(spark, g.toDF("src", "dst"), 64, deltaMaxAlive = 0L)
+          .as[(String, Long)].collect().toMap)
       assert(recomputeCores === runCores(g))
     }
   }
 
   test("empty and null-endpoint feeds fail loudly") {
-    val e1 = intercept[IllegalArgumentException] {
-      KCore.peel(spark,
-        Seq.empty[(String, String)].toDF("src", "dst"), 2, 4)
+    forEachGraphPath { path =>
+      val e1 = intercept[IllegalArgumentException] {
+        KCore.peel(spark,
+          Seq.empty[(String, String)].toDF("src", "dst"), 2, 4)
+      }
+      assert(e1.getMessage.contains("empty"), path)
+      val withNull = Seq(("a", "b")).toDF("src", "dst")
+        .unionAll(Seq((null: String, "b")).toDF("src", "dst"))
+      val e2 = intercept[IllegalArgumentException] {
+        KCore.peel(spark, withNull, 2, 4)
+      }
+      assert(e2.getMessage.contains("NULL"), path)
+      // NULL edges only: the canonical frame comes back empty, and the
+      // guard must still count what the raw feed held
+      val e3 = intercept[IllegalArgumentException] {
+        KCore.peel(spark, Seq((null: String, "b"), ("a", null: String))
+          .toDF("src", "dst"), 2, 4)
+      }
+      assert(e3.getMessage.contains("2 edges carry a NULL endpoint"),
+        s"$path: ${e3.getMessage}")
     }
-    assert(e1.getMessage.contains("empty"))
-    val withNull = Seq(("a", "b")).toDF("src", "dst")
-      .unionAll(Seq((null: String, "b")).toDF("src", "dst"))
-    val e2 = intercept[IllegalArgumentException] {
-      KCore.peel(spark, withNull, 2, 4)
-    }
-    assert(e2.getMessage.contains("NULL"))
-    // NULL edges only: the canonical frame comes back empty, and the
-    // guard must still count what the raw feed held
-    val e3 = intercept[IllegalArgumentException] {
-      KCore.peel(spark, Seq((null: String, "b"), ("a", null: String))
-        .toDF("src", "dst"), 2, 4)
-    }
-    assert(e3.getMessage.contains("2 edges carry a NULL endpoint"),
-      e3.getMessage)
   }
 
   /** Core-number twin straight off the definition: c(v) = max k such
@@ -146,8 +152,8 @@ class KCoreSpec extends AnyFunSuite with SparkTestBase {
 
   private def runCores(edges: Seq[(String, String)],
                        maxRounds: Int = 64): Map[String, Long] =
-    KCore.coreNumbers(spark, edges.toDF("src", "dst"), maxRounds)
-      .as[(String, Long)].collect().toMap
+    onBothGraphPaths(KCore.coreNumbers(spark, edges.toDF("src", "dst"), maxRounds))(
+      _.as[(String, Long)].collect().toMap)
 
   test("core numbers match the definition twin on the cascade graph") {
     val got = runCores(cascade)
@@ -175,15 +181,17 @@ class KCoreSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("core numbers: an unfinished ladder fails loudly, never mislabels") {
-    val e = intercept[IllegalArgumentException] {
-      runCores(cascade, maxRounds = 3)
-    }
-    assert(e.getMessage.contains("mislabel"))
-    // null-endpoint guard matches peel's
-    val withNull = Seq(("a", "b")).toDF("src", "dst")
-      .unionAll(Seq((null: String, "b")).toDF("src", "dst"))
-    intercept[IllegalArgumentException] {
-      KCore.coreNumbers(spark, withNull, 8)
+    forEachGraphPath { path =>
+      val e = intercept[IllegalArgumentException] {
+        KCore.coreNumbers(spark, cascade.toDF("src", "dst"), 3)
+      }
+      assert(e.getMessage.contains("mislabel"), path)
+      // null-endpoint guard matches peel's
+      val withNull = Seq(("a", "b")).toDF("src", "dst")
+        .unionAll(Seq((null: String, "b")).toDF("src", "dst"))
+      intercept[IllegalArgumentException] {
+        KCore.coreNumbers(spark, withNull, 8)
+      }
     }
   }
 
@@ -215,9 +223,11 @@ class KCoreSpec extends AnyFunSuite with SparkTestBase {
     assert(out.length === 18, "11-clique + 7-cycle survive")
     assert(out.map(_._3).toSet === Set(2L, 10L),
       "core degrees separate the cycle from the clique")
-    intercept[IllegalArgumentException] {
-      graft.operators.KCore.peel(spark,
-        graft.queries.GraphQueries.kcoreEdges(spark, dir), 2, 10)
+    forEachGraphPath { _ =>
+      intercept[IllegalArgumentException] {
+        graft.operators.KCore.peel(spark,
+          graft.queries.GraphQueries.kcoreEdges(spark, dir), 2, 10)
+      }
     }
   }
 }

@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** PageRank must keep EVERY node in the frame each round — including
   * zero-in-degree nodes (out-edges only), whose rank is exactly the
   * teleport term and whose outgoing contributions must keep flowing.
-  * Reference: an in-memory loop over the same integer recurrence.
+  * Reference: an in-memory loop over the same integer recurrence. The
+  * twin cases run on both paths of [[GraphInput]]'s size rule (driver
+  * and, with broadcasts disabled, the distributed loops).
   */
 class PageRankSpec extends AnyFunSuite with SparkTestBase {
 
@@ -31,9 +33,28 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
     r
   }
 
+  private def ranks(build: => org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    onBothGraphPaths(build)(_.as[(Long, Long)].collect().toMap)
+
   private def run(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] =
-    PageRank.run(spark, edges.toDF("src", "dst"), iters)
-      .as[(Long, Long)].collect().toMap
+    ranks(PageRank.run(spark, edges.toDF("src", "dst"), iters))
+
+  /** Random star (hub 0 to and from every node) and disconnected (two
+    * node ranges) multigraphs; `backEdges` adds each edge's reverse so
+    * every node has an out-edge (the classic faces' contract).
+    */
+  private def randomGraphs(seed: Int, n: Int, m: Int, backEdges: Boolean)
+  : Seq[(String, Seq[(Long, Long)])] = {
+    val rnd = new scala.util.Random(seed)
+    def uniform(base: Long) = (1 to m).map(_ =>
+      (base + rnd.nextInt(n), base + rnd.nextInt(n)))
+    val star = (1 until n).map(i => (0L, i.toLong)) ++
+      (1 until n by 2).map(i => (i.toLong, 0L)) ++ uniform(0L).take(m / 2)
+    val split = uniform(0L) ++ uniform(1000L)
+    Seq("star" -> star, "split" -> split).map { case (shape, e) =>
+      shape -> (if (backEdges) e ++ e.map(_.swap) else e)
+    }
+  }
 
   test("zero-in-degree node keeps teleport rank and keeps contributing") {
     // 1 -> 2 -> 3 -> 2: node 1 has out-edges but NO in-edges (the crawl
@@ -70,6 +91,16 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
     assert(run(edges, 6) === reference(edges, 6))
   }
 
+  test("matches the in-memory reference on random star and disconnected graphs") {
+    // multi-edges stay (they are weight here) and so do self-loops
+    for (seed <- Seq(1, 2); (n, m) <- Seq((8, 30), (20, 60));
+         (shape, edges) <- randomGraphs(seed, n, m, backEdges = true);
+         iters <- Seq(1, 4)) {
+      assert(run(edges, iters) === reference(edges, iters),
+        s"$shape seed=$seed n=$n m=$m iters=$iters")
+    }
+  }
+
   test("weighted: matches an in-memory twin, splits shares by weight") {
     def reference(edges: Seq[(Long, Long, Long)], iters: Int): Map[Long, Long] = {
       val nodes = edges.map(_._1).distinct.sorted
@@ -87,15 +118,14 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
     }
     // node 1 sends 9/10 of its mass to 2 and 1/10 to 3
     val edges = Seq((1L, 2L, 9L), (1L, 3L, 1L), (2L, 1L, 1L), (3L, 1L, 1L))
-    val got = PageRank.runWeighted(spark, edges.toDF("src", "dst", "w"), 4)
-      .as[(Long, Long)].collect().toMap
+    val got = ranks(
+      PageRank.runWeighted(spark, edges.toDF("src", "dst", "w"), 4))
     assert(got === reference(edges, 4))
     assert(got(2L) > got(3L), "heavier edge must carry more rank")
     // uniform weights must equal the classic form exactly
     val uni = Seq((1L, 2L, 1L), (2L, 3L, 1L), (3L, 2L, 1L))
-    assert(PageRank.runWeighted(spark, uni.toDF("src", "dst", "w"), 3)
-      .as[(Long, Long)].collect().toMap ===
-      run(uni.map(e => (e._1, e._2)), 3))
+    assert(ranks(PageRank.runWeighted(spark, uni.toDF("src", "dst", "w"), 3))
+      === run(uni.map(e => (e._1, e._2)), 3))
   }
 
   test("weighted: loud guards on non-positive, oversized, null weights") {
@@ -130,9 +160,8 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
     // 1 -> 2 -> 3 -> 2 and isolated pair 4 <-> 5; seed = {1}
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 2L), (4L, 5L), (5L, 4L))
     val seeds = Seq(1L).toDF("node")
-    val got = PageRank.runPersonalized(
-        spark, edges.toDF("src", "dst"), seeds, 4)
-      .as[(Long, Long)].collect().toMap
+    val got = ranks(PageRank.runPersonalized(
+      spark, edges.toDF("src", "dst"), seeds, 4))
     val r0 = PageRank.Scale / 1
     val tp = 15L * r0 / 100L
     // the seed has no in-edges: rank = its teleport, every round
@@ -170,18 +199,20 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
     // silently vanish (no spine row, no out-shares) — the operator must
     // refuse, naming the offender, on all three faces.
     val dangling = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-    val msg = intercept[IllegalArgumentException] {
-      PageRank.run(spark, dangling, 2)
-    }.getMessage
-    assert(msg.contains("dangling") && msg.contains("3"),
-      s"message must name the sink node: $msg")
-    assert(intercept[IllegalArgumentException] {
-      PageRank.runWeighted(spark,
-        Seq((1L, 2L, 1L), (2L, 3L, 2L)).toDF("src", "dst", "w"), 2)
-    }.getMessage.contains("dangling"))
-    assert(intercept[IllegalArgumentException] {
-      PageRank.runPersonalized(spark, dangling, Seq(1L).toDF("node"), 2)
-    }.getMessage.contains("dangling"))
+    forEachGraphPath { path =>
+      val msg = intercept[IllegalArgumentException] {
+        PageRank.run(spark, dangling, 2)
+      }.getMessage
+      assert(msg.contains("dangling") && msg.contains("3"),
+        s"$path: message must name the sink node: $msg")
+      assert(intercept[IllegalArgumentException] {
+        PageRank.runWeighted(spark,
+          Seq((1L, 2L, 1L), (2L, 3L, 2L)).toDF("src", "dst", "w"), 2)
+      }.getMessage.contains("dangling"), path)
+      assert(intercept[IllegalArgumentException] {
+        PageRank.runPersonalized(spark, dangling, Seq(1L).toDF("node"), 2)
+      }.getMessage.contains("dangling"), path)
+    }
     // the fix the message prescribes — a back-edge — makes the same
     // graph rank cleanly (non-vacuity of the guard's advice)
     val healed = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
@@ -209,9 +240,8 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
       r
     }
     for (iters <- Seq(1, 2, 4)) {
-      val got = PageRank.runDanglingRedistributed(
-          spark, edges.toDF("src", "dst"), iters)
-        .as[(Long, Long)].collect().toMap
+      val got = ranks(PageRank.runDanglingRedistributed(
+        spark, edges.toDF("src", "dst"), iters))
       assert(got === reference(iters), s"mismatch at iters=$iters")
       assert(got.keySet === Set(1L, 2L, 3L), "the sink must get a row")
       // mass conservation: redistribution closes the dangling leak, so
@@ -220,11 +250,37 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
         && got.values.sum <= PageRank.Scale)
     }
     // non-vacuity: the sink accumulates real rank (above bare teleport)
-    val r2 = PageRank.runDanglingRedistributed(
-        spark, edges.toDF("src", "dst"), 2)
-      .as[(Long, Long)].collect().toMap
+    val r2 = ranks(PageRank.runDanglingRedistributed(
+      spark, edges.toDF("src", "dst"), 2))
     val tp = 15L * (PageRank.Scale / 3) / 100L
     assert(r2(3L) > tp, "sink must receive link mass, not just teleport")
+  }
+
+  test("dangling-redistribution face: twin on random star and disconnected graphs") {
+    def reference(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+      val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct
+      val deg = edges.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+      val n = nodes.size
+      val r0 = PageRank.Scale / n
+      val tp = 15L * r0 / 100L
+      var r = nodes.map(_ -> r0).toMap
+      for (_ <- 1 to iters) {
+        val dang = nodes.filterNot(deg.contains).map(r).sum
+        val shares = edges.groupBy(_._2).view.mapValues(
+          _.map { case (u, _) => r(u) / deg(u) }.sum).toMap
+        r = nodes.map(v =>
+          v -> (tp + 85L * (shares.getOrElse(v, 0L) + dang / n) / 100L)).toMap
+      }
+      r
+    }
+    // no back-edges: the random graphs keep their sinks
+    for (seed <- Seq(3, 4); (n, m) <- Seq((8, 12), (20, 30));
+         (shape, edges) <- randomGraphs(seed, n, m, backEdges = false);
+         iters <- Seq(1, 3)) {
+      assert(ranks(PageRank.runDanglingRedistributed(
+          spark, edges.toDF("src", "dst"), iters)) === reference(edges, iters),
+        s"$shape seed=$seed n=$n m=$m iters=$iters")
+    }
   }
 
   test("rank mass is conserved up to truncation dust") {
