@@ -29,19 +29,23 @@ import org.apache.spark.sql.types._
   *  - SHARED FRAMES: the adjacency (both directions) and degree frames,
   *    lazy derivations over the pin that each caller cuts or pins as
   *    its loop needs.
-  *  - SIZE RULE ([[Pinned.onDriver]]): a graph whose pinned frame fits
-  *    `spark.sql.autoBroadcastJoinThreshold` (rows × schema.defaultSize,
-  *    the row count observed on the pin, so the test costs no job; a
-  *    threshold ≤ 0 never qualifies, Spark's meaning of -1) is
-  *    FINISHED ON THE DRIVER: the operator collects the pin once, runs
+  *  - SIZE RULE ([[Pinned.onDriver]]): a graph whose pinned frame has
+  *    at most [[DriverMaxEdges]] rows AND fits
+  *    `spark.sql.autoBroadcastJoinThreshold` (rows × schema.defaultSize;
+  *    a threshold ≤ 0 never qualifies, Spark's meaning of -1) is
+  *    FINISHED ON THE DRIVER. The row count is observed on the pin, so
+  *    the test costs no job. The operator collects the pin once, runs
   *    its fixed-round or peel loop in plain Scala over the same integer
   *    arithmetic, and returns the rows as a local frame with the
   *    distributed path's schema. A round of a distributed loop is a few
   *    Spark jobs of fixed cost whatever the graph's size, so a
   *    kilobyte graph paid tens of jobs for microseconds of arithmetic.
-  *    The rule is scale-neutral: the bound is the one Spark already
-  *    applies to every broadcast, and graphs above it keep the
-  *    distributed loops unchanged. The driver kernels key and order
+  *    The row cap is where the two paths cross (measured with
+  *    `graft.GraphPathTiming`, see [[DriverMaxEdges]]): the threshold
+  *    alone, which deployments raise to 100 MB–1 GB for their joins,
+  *    would hand the single-threaded driver graphs of millions of
+  *    edges. The rule is scale-neutral: graphs above either bound keep
+  *    the distributed loops unchanged. The driver kernels key and order
   *    nodes by their Catalyst values (UTF8String byte order for
   *    strings, as Spark sorts), so tie-breaks and orientations match.
   *
@@ -66,7 +70,7 @@ private[graft] object GraphInput {
     def onDriver: Boolean = {
       val threshold = broadcastThresholdBytes(edges.sparkSession)
       val nodeTypes = nodeCols.map(edges.schema(_).dataType).distinct
-      threshold > 0 &&
+      threshold > 0 && m <= driverMaxEdges.value &&
         m <= threshold / math.max(1, edges.schema.defaultSize) &&
         nodeTypes.size == 1 && keyable(nodeTypes.head)
     }
@@ -87,6 +91,34 @@ private[graft] object GraphInput {
     def collectKeyed(): Array[Array[Any]] =
       GraphInput.collectKeyed(edges, nodeCols: _*)
   }
+
+  /** The size rule's row cap: 2^18 edges. `graft.GraphPathTiming` on a
+    * 4-core box (local[4], 8 GB driver heap; random graphs with ~35-byte
+    * string ids, m / 7 nodes, skewed destinations) timed the six entry
+    * points on both paths, median of 3 warm calls:
+    *
+    *   m      path         hits  lpa   kcore core# tri   pr_dang
+    *   100k   driver       1.09  1.37  0.86  0.93  1.22  0.86
+    *          distributed  3.06  2.14  1.04  11.9  4.76  1.91
+    *   262k   driver       3.32  4.05  1.58  2.63  2.49  2.40
+    *          distributed  5.07  4.71  1.63  18.3  8.73  2.54
+    *   1M     driver       11.6  15.3  4.41  10.5  11.1  10.9
+    *          distributed  9.37  21.6  3.16  29.1  19.9  6.43
+    *
+    * Up to 262k the driver is never slower; there KCore.peel and
+    * PageRank tie with the four-core loops, and at 1M the one-thread
+    * driver loses on HITS, KCore.peel and PageRank. At 262k the heap's
+    * high-water mark (garbage included) was 1.7–2.9 GB on the driver
+    * path, against 2.3–5.2 GB distributed. 2^18 is also what the
+    * default 10 MB threshold admits of two string columns, so only a
+    * raised threshold meets the cap.
+    */
+  private[graft] val DriverMaxEdges = 1L << 18
+
+  /** The cap in force: [[DriverMaxEdges]], lifted only by the timing
+    * tool that places it, for the calls it times.
+    */
+  private[graft] val driverMaxEdges = new scala.util.DynamicVariable(DriverMaxEdges)
 
   /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes
     * (suffixed values like "10MB" accepted; -1 means disabled).

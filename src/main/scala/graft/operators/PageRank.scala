@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.plans.Checkpoints
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField}
 
@@ -47,9 +48,10 @@ import org.apache.spark.sql.types.{LongType, StructField}
   * directions satisfies this for free). A node that appears only as
   * `dst` would receive rank whose onward mass silently vanishes — the
   * loop's spine is built from `src` nodes, so the sink would not even
-  * get an output row — so every face FAILS LOUDLY on such nodes (one
-  * metadata-plane anti-join on the pinned edge frame, naming
-  * offenders). Callers with genuinely dangling graphs either add
+  * get an output row — so the three other faces FAIL LOUDLY on such
+  * nodes, naming offenders (one metadata-plane anti-join on the pinned
+  * edge frame, or a pass over its collected rows on the driver path).
+  * An edge with a NULL dst refuses on every face. Callers with genuinely dangling graphs either add
   * self-loops / back-edges upstream, or redistribute dangling mass
   * before calling (the classic fix is dst → every node, which is a
   * dense edge set and therefore an upstream modeling decision, not a
@@ -65,10 +67,10 @@ import org.apache.spark.sql.types.{LongType, StructField}
   * the same feed could share and drop), and each node's out-weight
   * total rides the |V|-row rank frame, so the round's one edge join
   * brings both r and totw; the driver holds only the node count (one
-  * metadata-plane scalar). A graph whose pinned edge frame fits
-  * `spark.sql.autoBroadcastJoinThreshold` ([[GraphInput]]'s size rule,
-  * read off the pin's observed row count) runs the rounds on the
-  * driver over the collected edges — the same per-edge
+  * metadata-plane scalar). A graph that passes [[GraphInput]]'s size
+  * rule (read off the pin's observed row count) is collected once and
+  * finished on the driver: guards, node set, out-weights and rounds
+  * all come from that one collect — the same per-edge
   * `(r*w) div totw` shares and per-round literals — and larger graphs
   * keep the distributed loops.
   */
@@ -98,28 +100,56 @@ object PageRank {
     */
   private[operators] val CutStride = 8
 
-  /** The shared iteration core. `ewt` is the pinned (src, dst, w)
-    * frame, whose chain this loop finishes; `init` carries one row per
-    * node with its teleport term, initial rank and out-weight total
-    * (node, tp, r0, totw).
+  /** The shared core of the three faces whose node set is the src
+    * nodes. `ewt` is the pinned (src, dst, w) frame, whose chain this
+    * call finishes. Both paths check the same facts in the same order —
+    * the weights (when `weighted`), the dangling nodes, the teleport
+    * set (every node, or the `seeds` among them) — and run the same
+    * recurrence: the driver path over the one collect of the pin, the
+    * distributed path with its own Spark guards and rank frame.
     */
-  private def loop(ewt: GraphInput.Pinned, init: DataFrame,
-                   iters: Int): DataFrame =
+  private def loop(ewt: GraphInput.Pinned, iters: Int, weighted: Boolean,
+                   seeds: Option[DataFrame]): DataFrame = {
+    require(ewt.m > 0, "PageRank: empty graph")
+    val nodes = outWeights(ewt.edges)
     ewt.finish {
-      val edges = ewt.collectKeyed()
-      val spine = GraphInput.collectKeyed(init, "node")
-      def column(i: Int) =
-        spine.map(x => x(0) -> x(i).asInstanceOf[Long]).toMap
-      val (tp, totw) = (column(1), column(3))
-      var r = column(2)
+      val e = ewt.collectKeyed()
+      if (weighted) {
+        val ws = e.flatMap(x => Option(x(2)).map(_.asInstanceOf[Long]))
+        requireWeights(e.length, ws.length, ws.min, ws.max)
+      }
+      val totw = e.groupMapReduce(_(0))(_(2).asInstanceOf[Long])(_ + _)
+      val show = CatalystTypeConverters.createToScalaConverter(
+        ewt.edges.schema("dst").dataType)
+      requireNoDangling(e.iterator.map(_(1)).filterNot(totw.contains)
+        .distinct.take(6).map(v => String.valueOf(show(v))).toSeq)
+      val teleported: Any => Boolean = seeds.fold[Any => Boolean](_ => true)(
+        s => GraphInput.collectKeyed(seedNodes(nodes, s), "node")
+          .map(_(0)).toSet)
+      val (tp, r0) = teleport(totw.keys.count(teleported))
+      var r = totw.map { case (v, _) => v -> (if (teleported(v)) r0 else 0L) }
       (1 to iters).foreach { _ =>
-        val s = localShares(edges, r, totw)
-        r = tp.map { case (v, t) =>
-          v -> (t + 85L * s.getOrElse(v, 0L) / 100L)
+        val s = localShares(e, r, totw)
+        r = r.map { case (v, _) =>
+          v -> ((if (teleported(v)) tp else 0L) + 85L * s.getOrElse(v, 0L) / 100L)
         }
       }
-      localRanks(init, r)
+      localRanks(nodes, r)
     } {
+      val chain = ewt.chain
+      val e = ewt.edges
+      if (weighted) {
+        val b = e.agg(count(col("w")), min(col("w")), max(col("w"))).head()
+        requireWeights(ewt.m, b.getLong(0), b.getLong(1), b.getLong(2))
+      }
+      requireNoDangling(e.select(col("dst"))
+        .join(e.select(col("src").as("dst")), Seq("dst"), "left_anti")
+        .distinct()
+        .limit(6).collect().map(r => String.valueOf(r.get(0))).toSeq)
+      val flagged = seeds.fold(nodes.withColumn("__seed", lit(true)))(s =>
+        nodes.join(s.select(col("node"), lit(true).as("__seed")).distinct(),
+          Seq("node"), "left"))
+      val (tp, r0) = teleport(flagged.where(col("__seed")).count())
       // The node spine: every node. Each round's aggregation only
       // yields rows for nodes with IN-edges; left-joining the shares
       // back onto the spine keeps zero-in-degree nodes (out-edges only
@@ -127,9 +157,9 @@ object PageRank {
       // so their outgoing contributions survive into the next round
       // instead of silently vanishing. PINNED: every round joins
       // against it.
-      val chain = ewt.chain
-      val spine = chain.pin(init)
-      val e = ewt.edges
+      val spine = chain.pin(flagged.select(col("node"),
+        when(col("__seed"), tp).otherwise(0L).as("tp"),
+        when(col("__seed"), r0).otherwise(0L).as("r0"), col("totw")))
       var ranks = spine.select(col("node"), col("r0").as("r"), col("totw"))
       (1 to iters).foreach { i =>
         val next = spine.join(
@@ -149,6 +179,7 @@ object PageRank {
       chain.sealIfReliable(
         ranks.select(col("node"), col("r").as("rank_scaled")))
     }
+  }
 
   /** One round's shares on the driver: Σ over each node's in-edges of
     * `(r(src) * w) div totw(src)`, edges whose src has no rank skipped
@@ -177,12 +208,25 @@ object PageRank {
   /** The weighted edge frame (src, dst, w) — w per edge, uniform
     * lit(1) for the classic form — pinned on `chain` with its row count
     * observed for the size rule. An edge with a NULL src matches no
-    * rank row, so it carries no rank and is dropped here.
+    * rank row, so it carries no rank and is dropped here. An edge with
+    * a NULL dst refuses loudly: its share would reach no node (the
+    * spine's join never matches NULL), and the two paths would differ
+    * on where it goes. Its count rides the pin, so the guard costs no
+    * job.
     */
   private def pinWeighted(chain: Checkpoints.Chain, edges: DataFrame,
-                          w: Column): GraphInput.Pinned =
-    GraphInput.pinCounted(chain, edges.where(col("src").isNotNull)
-      .select(col("src"), col("dst"), w.cast(LongType).as("w")), "src", "dst")
+                          w: Column): GraphInput.Pinned = {
+    val nulls = Observation()
+    val pinned = GraphInput.pinCounted(chain,
+      edges.where(col("src").isNotNull)
+        .select(col("src"), col("dst"), w.cast(LongType).as("w"))
+        .observe(nulls, count(when(col("dst").isNull, 1)).as("n")),
+      "src", "dst")
+    val n = nulls.get.getOrElse("n", 0L).asInstanceOf[Long]
+    require(n == 0L, s"PageRank: $n edges carry a NULL dst — the rank " +
+      "mass sent along them would silently vanish; repair the edge feed")
+    pinned
+  }
 
   /** (node, totw): every src with the total weight of its out-edges,
     * the divisor of its per-edge shares. The rank frame carries it, so
@@ -191,16 +235,39 @@ object PageRank {
   private def outWeights(ewt: DataFrame): DataFrame =
     ewt.groupBy(col("src").as("node")).agg(sum(col("w")).as("totw"))
 
-  /** Loud dangling-node guard (header contract): any node appearing as
-    * `dst` but never as `src` fails the run, naming up to five
-    * offenders. One metadata-plane job — two distincts + an anti-join
-    * on the already-pinned edge frame, collecting at most six rows.
+  /** The `seeds` that are nodes of the graph (`nodes`' node type). */
+  private def seedNodes(nodes: DataFrame, seeds: DataFrame): DataFrame =
+    nodes.join(seeds.select(col("node")), Seq("node"), "left_semi")
+      .select(col("node"))
+
+  /** (tp, r0) for `ns` teleport nodes — refusing an empty seed set. */
+  private def teleport(ns: Long): (Long, Long) = {
+    require(ns > 0, "PageRank.runPersonalized: no seed is in the graph")
+    val r0 = Scale / ns
+    (15L * r0 / 100L, r0)
+  }
+
+  /** The weighted face's guards over `total` edges, `nonNull` of them
+    * with a weight in [`lo`, `hi`] (read only when every edge has one).
     */
-  private def requireNoDangling(ewt: DataFrame): Unit = {
-    val offenders = ewt.select(col("dst"))
-      .join(ewt.select(col("src").as("dst")), Seq("dst"), "left_anti")
-      .distinct()
-      .limit(6).collect().map(r => String.valueOf(r.get(0)))
+  private def requireWeights(total: Long, nonNull: Long, lo: => Long,
+                             hi: => Long): Unit = {
+    // min/max SKIP nulls, so a null-weighted edge would otherwise pass
+    // the bounds checks and then silently drop its rank mass in the loop
+    require(nonNull == total,
+      s"PageRank.runWeighted: ${total - nonNull} edges carry a " +
+        "NULL weight — their rank mass would silently vanish")
+    require(lo >= 1L, "PageRank.runWeighted: weights must be positive")
+    require(hi <= MaxWeight,
+      s"PageRank.runWeighted: max weight $hi exceeds " +
+        s"$MaxWeight — r*w would overflow the integer lattice")
+  }
+
+  /** Loud dangling-node guard (header contract): any node appearing as
+    * `dst` but never as `src` fails the run, naming up to five of the
+    * `offenders` (at most six are gathered).
+    */
+  private def requireNoDangling(offenders: Seq[String]): Unit =
     if (offenders.nonEmpty) {
       val shown = offenders.take(5).mkString(", ") +
         (if (offenders.length > 5) ", ..." else "")
@@ -211,7 +278,6 @@ object PageRank {
           "every node an out-edge, or redistribute dangling mass " +
           "upstream before ranking")
     }
-  }
 
   /** @param edges  columns `src`, `dst` (node ids); every node
     *               referenced must appear as a `src` at least once
@@ -223,15 +289,7 @@ object PageRank {
   def run(spark: SparkSession, edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val chain = Checkpoints.chain() // reliable-policy file GC
-    val ewt = pinWeighted(chain, edges, lit(1L)) // read every round
-    requireNoDangling(ewt.edges)
-    val nodes = outWeights(ewt.edges)
-    val n = nodes.count() // ONE driver scalar: |V|
-    require(n > 0, "PageRank: empty graph")
-    val r0 = Scale / n
-    val tp = 15L * r0 / 100L
-    loop(ewt, nodes.select(col("node"), lit(tp).as("tp"),
-      lit(r0).as("r0"), col("totw")), iters)
+    loop(pinWeighted(chain, edges, lit(1L)), iters, weighted = false, None)
   }
 
   /** Weighted form: `edges` carries a positive integer weight column
@@ -239,36 +297,15 @@ object PageRank {
     * crawl graph provides); a node's rank splits proportionally,
     * share(u→v) = (r(u)·w(u,v)) div (Σ_x w(u,x)). Weights are loudly
     * bounded by [[MaxWeight]] (one metadata-plane aggregate on the
-    * pinned frame) so the BIGINT product cannot wrap.
+    * pinned frame, or a pass over the collected edges on the driver
+    * path) so the BIGINT product cannot wrap; NULL and non-positive
+    * weights refuse too.
     */
   def runWeighted(spark: SparkSession, edges: DataFrame,
                   iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val chain = Checkpoints.chain() // reliable-policy file GC
-    val ewt = pinWeighted(chain, edges, col("w"))
-    // one metadata-plane aggregate covers every guard: emptiness,
-    // NULL weights (min/max SKIP nulls, so a null-weighted edge would
-    // otherwise pass the bounds checks and then silently drop its
-    // rank mass in the loop), positivity, and the overflow cap
-    val b = ewt.edges.agg(count(lit(1)), count(col("w")),
-      min(col("w")), max(col("w"))).head()
-    val total = b.getLong(0)
-    require(total > 0, "PageRank: empty graph")
-    require(b.getLong(1) == total,
-      s"PageRank.runWeighted: ${total - b.getLong(1)} edges carry a " +
-        "NULL weight — their rank mass would silently vanish")
-    require(b.getLong(2) >= 1L,
-      "PageRank.runWeighted: weights must be positive")
-    require(b.getLong(3) <= MaxWeight,
-      s"PageRank.runWeighted: max weight ${b.getLong(3)} exceeds " +
-        s"$MaxWeight — r*w would overflow the integer lattice")
-    requireNoDangling(ewt.edges)
-    val nodes = outWeights(ewt.edges)
-    val n = nodes.count()
-    val r0 = Scale / n
-    val tp = 15L * r0 / 100L
-    loop(ewt, nodes.select(col("node"), lit(tp).as("tp"),
-      lit(r0).as("r0"), col("totw")), iters)
+    loop(pinWeighted(chain, edges, col("w")), iters, weighted = true, None)
   }
 
   /** Dangling-tolerant form — the redistribution face the loud guard
@@ -327,7 +364,7 @@ object PageRank {
       // round's rides its cut's Observation below (r21 — was a separate
       // 1-row aggregate subtree + crossJoin built into every round's
       // plan, i.e. one extra scan of the ranks cut per round)
-      val obsSpine = org.apache.spark.sql.Observation()
+      val obsSpine = Observation()
       val spine = chain.pin(nodes.join(outWeights(ewt), Seq("node"), "left")
         .select(col("node"), col("totw").isNotNull.as("has_out"),
           col("totw"))
@@ -357,7 +394,7 @@ object PageRank {
         // across the doubled tree). The single-reference classic loop
         // strides; this one materializes — and the NEXT round's
         // dangling mass rides the materialization as an Observation.
-        val obs = org.apache.spark.sql.Observation()
+        val obs = Observation()
         ranks = chain.cut(next.observe(obs,
           coalesce(sum(when(!col("has_out"), col("r"))), lit(0L))
             .as("dm")))
@@ -379,18 +416,7 @@ object PageRank {
                       seeds: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val chain = Checkpoints.chain() // reliable-policy file GC
-    val ewt = pinWeighted(chain, edges, lit(1L))
-    requireNoDangling(ewt.edges)
-    val nodes = outWeights(ewt.edges)
-    val flagged = nodes.join(
-      seeds.select(col("node"), lit(true).as("__seed")).distinct(),
-      Seq("node"), "left")
-    val ns = flagged.where(col("__seed")).count() // metadata scalar
-    require(ns > 0, "PageRank.runPersonalized: no seed is in the graph")
-    val r0 = Scale / ns
-    val tp = 15L * r0 / 100L
-    loop(ewt, flagged.select(col("node"),
-      when(col("__seed"), tp).otherwise(0L).as("tp"),
-      when(col("__seed"), r0).otherwise(0L).as("r0"), col("totw")), iters)
+    loop(pinWeighted(chain, edges, lit(1L)), iters, weighted = false,
+      Some(seeds))
   }
 }

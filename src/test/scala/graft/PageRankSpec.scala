@@ -129,15 +129,19 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("weighted: loud guards on non-positive, oversized, null weights") {
+    forEachGraphPath(path => weightGuards(path))
+  }
+
+  private def weightGuards(path: String): Unit = {
     val zero = Seq((1L, 2L, 0L), (2L, 1L, 1L)).toDF("src", "dst", "w")
     assert(intercept[IllegalArgumentException] {
       PageRank.runWeighted(spark, zero, 1)
-    }.getMessage.contains("positive"))
+    }.getMessage.contains("positive"), path)
     val huge = Seq((1L, 2L, PageRank.MaxWeight + 1), (2L, 1L, 1L))
       .toDF("src", "dst", "w")
     assert(intercept[IllegalArgumentException] {
       PageRank.runWeighted(spark, huge, 1)
-    }.getMessage.contains("overflow"))
+    }.getMessage.contains("overflow"), path)
     // a PARTIALLY-null weight column would pass min/max (both skip
     // nulls) and then silently drop the null edges' mass in the loop —
     // it must fail loudly instead
@@ -147,12 +151,12 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
       .toDF("src", "dst", "w")
     assert(intercept[IllegalArgumentException] {
       PageRank.runWeighted(spark, nully, 1)
-    }.getMessage.contains("NULL weight"))
+    }.getMessage.contains("NULL weight"), path)
     // empty graph says so, not "weights must be positive"
     assert(intercept[IllegalArgumentException] {
       PageRank.runWeighted(spark,
         Seq.empty[(Long, Long, Long)].toDF("src", "dst", "w"), 1)
-    }.getMessage.contains("empty graph"))
+    }.getMessage.contains("empty graph"), path)
   }
 
   test("personalized: teleport only reaches seeds; unreachable nodes rank 0") {
@@ -188,10 +192,42 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
     }
     assert(got === reference(4))
     // a seed set disjoint from the graph must fail loudly
-    assert(intercept[IllegalArgumentException] {
-      PageRank.runPersonalized(spark, edges.toDF("src", "dst"),
-        Seq(99L).toDF("node"), 1)
-    }.getMessage.contains("no seed"))
+    forEachGraphPath { path =>
+      assert(intercept[IllegalArgumentException] {
+        PageRank.runPersonalized(spark, edges.toDF("src", "dst"),
+          Seq(99L).toDF("node"), 1)
+      }.getMessage.contains("no seed"), path)
+    }
+  }
+
+  test("a NULL dst refuses on every face and both paths; a NULL src drops") {
+    // the share sent along a NULL-dst edge reaches no spine row on the
+    // distributed path and a NULL key on the driver: refused, not guessed
+    val nullDst = Seq((1L, Some(2L)), (2L, Some(1L)), (2L, None))
+      .toDF("src", "dst")
+    val faces: Seq[(String, () => Any)] = Seq(
+      "run" -> (() => PageRank.run(spark, nullDst, 2)),
+      "runWeighted" -> (() => PageRank.runWeighted(spark,
+        nullDst.withColumn("w", lit(1L)), 2)),
+      "runPersonalized" -> (() => PageRank.runPersonalized(spark, nullDst,
+        Seq(1L).toDF("node"), 2)),
+      "runDanglingRedistributed" -> (() =>
+        PageRank.runDanglingRedistributed(spark, nullDst, 2)))
+    forEachGraphPath { path =>
+      faces.foreach { case (face, call) =>
+        val msg = intercept[IllegalArgumentException](call()).getMessage
+        assert(msg.contains("1 edges carry a NULL dst"), s"$path $face: $msg")
+      }
+    }
+    // a NULL src carries no rank: the edge drops on both paths, and the
+    // ranks are those of the graph without it
+    val nullSrc = Seq((Some(1L), 2L), (Some(2L), 1L), (None, 1L))
+      .toDF("src", "dst")
+    assert(ranks(PageRank.runDanglingRedistributed(spark, nullSrc, 3)) ===
+      ranks(PageRank.runDanglingRedistributed(spark,
+        Seq((1L, 2L), (2L, 1L)).toDF("src", "dst"), 3)))
+    assert(ranks(PageRank.run(spark, nullSrc, 3)) ===
+      run(Seq((1L, 2L), (2L, 1L)), 3))
   }
 
   test("dangling node (dst with no out-edge) fails loudly on every face") {

@@ -24,10 +24,16 @@ trait SparkTestBase { self: Suite =>
   /** `body` with `spark.sql.autoBroadcastJoinThreshold` at -1 (the
     * graph operators' distributed loops), the threshold restored after.
     */
-  def onDistributedGraphPath[T](body: => T): T = {
+  def onDistributedGraphPath[T](body: => T): T =
+    withBroadcastThreshold("-1")(body)
+
+  /** `body` with `spark.sql.autoBroadcastJoinThreshold` at `value`, the
+    * threshold restored after.
+    */
+  def withBroadcastThreshold[T](value: String)(body: => T): T = {
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
+    spark.conf.set(key, value)
     try body
     finally saved match {
       case Some(v) => spark.conf.set(key, v)
@@ -47,12 +53,17 @@ trait SparkTestBase { self: Suite =>
       got :+= ((path, df, read(df)))
     }
     val Vector((_, local, want), (_, dist, other)) = got
-    def onDriver(df: DataFrame) = df.queryExecution.analyzed.collectLeaves()
-      .forall(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-    assert(onDriver(local) && !onDriver(dist),
+    assert(finishedOnDriver(local) && !finishedOnDriver(dist),
       "the default session must finish on the driver, -1 must not")
     assert(dist.schema === local.schema, "schemas differ between paths")
     assert(other === want, "results differ between paths")
     want
   }
+
+  /** True when `df` reads only rows the driver holds (local leaves): a
+    * graph operator's result on the driver path.
+    */
+  def finishedOnDriver(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
 }
