@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StructType}
 import org.apache.spark.sql.Column
 
 /** Parquet table loaders for the driver testdata (TESTDATA.md) plus
@@ -15,9 +15,73 @@ object Tables {
 
   /** Scan one testdata table. Plain parquet scan — Catalyst handles
     * column pruning + predicate pushdown from whatever is layered on top.
+    *
+    * Schema memo: a path-based `spark.read.parquet` infers the schema
+    * with a footer-reading Spark job on every call (~0.1 s of driver
+    * time per read, per row build, on local[4] over 4 cores). The first
+    * read of a table in a session infers as before; a later read of the
+    * same unchanged files passes the memoized schema to
+    * `spark.read.schema(..)`, which plans the same relation and runs no
+    * job. The memo key is everything
+    * inference depends on: the path, every file under it (path, length,
+    * modification time) and the session's `spark.sql.parquet.*` /
+    * `spark.sql.legacy.parquet.*` values (nanosAsLong, binaryAsString
+    * and inferTimestampNTZ all change the inferred types). The trade:
+    * each read pays one file listing for its key, much cheaper than the
+    * inference job and footer read it replaces. The memo holds only
+    * `StructType`s (no plan, no session); a table rewritten in a
+    * session leaves its old key behind, one schema per version read.
+    *
+    * Failures pass through unchanged: a path the listing cannot find
+    * is read plainly, so Spark raises its own `PATH_NOT_FOUND`
+    * `AnalysisException`, and a failed inference ("Unable to infer
+    * schema" on a `_SUCCESS`-only directory) throws out of the memo
+    * build before anything is stored.
     */
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    schemaKey(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(key) =>
+        var inferred: DataFrame = null
+        val schema = schemaMemo.get(spark, key) {
+          inferred = spark.read.parquet(path)
+          inferred.schema
+        }
+        if (inferred != null) inferred
+        else spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  /** What a parquet schema inference at `path` depends on. */
+  private final case class SchemaKey(path: String,
+                                     files: Seq[(String, Long, Long)],
+                                     parquetConf: Map[String, String])
+
+  private val schemaMemo =
+    new graft.queries.SessionMemo[SchemaKey, StructType]()
+
+  /** The memo key of `path`, or None when the path cannot be listed. */
+  private def schemaKey(spark: SparkSession,
+                        path: String): Option[SchemaKey] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files =
+      try {
+        val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .listFiles(p, true)
+        val b = Seq.newBuilder[(String, Long, Long)]
+        while (it.hasNext) {
+          val f = it.next()
+          b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+        b.result().sortBy(_._1)
+      } catch { case _: java.io.FileNotFoundException => return None }
+    val conf = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.")
+    }
+    Some(SchemaKey(path, files, conf))
+  }
 
   /** Parallelism floor for CPU-dense derivations over a SMALL scan —
     * the optimization guide's §2.5 input-skew remedy ("one huge
@@ -39,9 +103,10 @@ object Tables {
     * back onto one task (the q_text_retrieval_eval fan-out
     * measurement).
     *
-    * Pushdown contract: the exchange sits above the scan and blocks
-    * filter pushdown across it — callers apply scan-level filters
-    * BEFORE spreading (or, as in the current call sites, have none).
+    * Pushdown: the spread does not block it. Catalyst pushes a filter
+    * applied after the spread through the REPARTITION_BY_NUM exchange,
+    * and it lands in the FileScan's PushedFilters beneath it (checked
+    * on Spark 4.1's executed plan).
     */
   def spreadBySize(df: DataFrame, inputBytes: Long,
                    keys: Seq[String]): DataFrame = {

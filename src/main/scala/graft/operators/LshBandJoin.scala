@@ -95,11 +95,14 @@ object LshBandJoin {
     // Small buckets enumerate pairs in-codegen from the sorted array;
     // saturated buckets come back as a (usually EMPTY) list whose
     // star-edge join carries NO broadcast hint on purpose: AQE sees the
-    // materialized size at runtime — empty propagates to nothing (the
-    // healthy-corpus case pays exactly the one shuffle), tiny converts
-    // to broadcast, and an adversarial corpus whose saturated-bucket
-    // list is itself huge falls back to a shuffle join instead of
-    // stalling the driver the way a forced broadcast would.
+    // materialized size at runtime — tiny converts to broadcast, and
+    // an adversarial corpus whose saturated-bucket list is itself huge
+    // falls back to a shuffle join instead of stalling the driver the
+    // way a forced broadcast would. A healthy corpus still pays the
+    // bucket shuffle TWICE: the join infers isnotnull(band_key) on the
+    // hot side, so that side's bucket exchange no longer matches the
+    // small side's, is not reused, and runs as a second, concurrent
+    // map stage writing the same bytes.
     val buckets = bands.where(col(idCol).isNotNull)
       .groupBy(col("band_key"))
       .agg(graft.functions.BoundedIdSet.boundedIdSet(maxBucket)(col(idCol))

@@ -740,6 +740,12 @@ object TextQueries extends QueryPack {
         col("pct_rank_micro"), col("known_source"), col("calibrated_keep"))
   }
 
+  /** `c` without any `ch`: a byte-level `replace`, where `translate`
+    * looks up every character of the ~3x-text-length encoding in a map.
+    */
+  private def dropChar(c: Column, ch: String): Column =
+    replace(c, lit(ch), lit(""))
+
   /** Frozen-vocab BPE encode frame (doc_id, n_tokens, enc_md5) of an
     * arbitrary documents frame — ONE builder shared by the batch row
     * (q_text_bpe_encode) and the streaming face
@@ -753,7 +759,7 @@ object TextQueries extends QueryPack {
         graft.functions.BpeFunctions.bpeEncodeDelim(
           col("text"), graft.operators.BpeVocab.merges).as("enc"))
       .select(col("doc_id"),
-        ((length(col("enc")) - length(translate(col("enc"), "|", "")))
+        ((length(col("enc")) - length(dropChar(col("enc"), "|")))
           .cast(LongType) / lit(2L)).cast(LongType).as("n_tokens"),
         md5(col("enc")).as("enc_md5"))
 
@@ -1387,9 +1393,10 @@ object TextQueries extends QueryPack {
       t(s, dir, "documents")
         .select(col("source"), enc.as("enc"))
         .select(col("source"),
-          ((length(col("enc")) - length(translate(col("enc"), "|", "")))
+          ((length(col("enc")) - length(dropChar(col("enc"), "|")))
             .cast(LongType) / lit(2L)).cast(LongType).as("toks"),
-          length(translate(col("enc"), "|#", "")).cast(LongType).as("chs"))
+          length(dropChar(dropChar(col("enc"), "|"), "#"))
+            .cast(LongType).as("chs"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("toks")).as("n_tokens"),

@@ -1433,7 +1433,8 @@ object Orchestrator {
     def refreshGraphRanks(iters: Int = 5,
                           redistributeDangling: Boolean = false,
                           note: String = ""): Long =
-      refreshGraphArtifact("indexes/graph_host_ranks", note)(edges =>
+      refreshGraphArtifact("indexes/graph_host_ranks", note,
+        directed = true)(edges =>
         if (redistributeDangling)
           graft.operators.PageRank.runDanglingRedistributed(
             spark, edges, iters)
@@ -1441,21 +1442,26 @@ object Orchestrator {
 
     /** ONE body for every whole-graph artifact refresh (ranks, HITS,
       * triangles, k-core, LPA communities — the faces-cannot-drift
-      * rule applied to the plane itself): read the accumulated
-      * DISTINCT edge table, run the operator INSIDE the failure scope
+      * rule applied to the plane itself): read the accumulated edge
+      * table (DISTINCT on (src, dst) when `directed`: PageRank ranks
+      * count multi-edges, and HITS's own directed distinct folds into
+      * it; the undirected operators canonicalize and de-duplicate in
+      * `GraphInput.undirected`, so a second exchange before theirs
+      * would be waste), run the operator INSIDE the failure scope
       * (the runGated discipline — each operator's loud guards fire
       * eagerly during its build, and a guard refusal must reach the
       * audit plane exactly like a dead write, or failedTargets() never
       * surfaces the stale artifact), ride the row count on the write
       * as an Observation, stamp SUCCESS with the cadence note.
       */
-    private def refreshGraphArtifact(target: String, note: String)
+    private def refreshGraphArtifact(target: String, note: String,
+                                     directed: Boolean)
                                     (build: DataFrame => DataFrame): Long = {
       val obs = org.apache.spark.sql.Observation()
       try {
-        val edges = readTable("indexes/graph_edges")
-          .select(col("src"), col("dst")).distinct()
-        build(edges)
+        val pairs = readTable("indexes/graph_edges")
+          .select(col("src"), col("dst"))
+        build(if (directed) pairs.distinct() else pairs)
           .observe(obs, count(lit(1)).as("n"))
           .write.mode(SaveMode.Overwrite)
           .parquet(s"$warehouse/$target")
@@ -1605,7 +1611,8 @@ object Orchestrator {
       * hubness — so there is no redistribute switch to carry.
       */
     def refreshHitsScores(iters: Int = 5, note: String = ""): Long =
-      refreshGraphArtifact("indexes/graph_hits_scores", note)(
+      refreshGraphArtifact("indexes/graph_hits_scores", note,
+        directed = true)(
         graft.operators.Hits.run(spark, _, iters))
 
     /** [[refreshIfDue]] around [[refreshHitsScores]] — the third
@@ -1630,7 +1637,8 @@ object Orchestrator {
       * endpoints) fire inside the failure scope.
       */
     def refreshTriangleCounts(note: String = ""): Long =
-      refreshGraphArtifact("indexes/graph_triangle_counts", note)(
+      refreshGraphArtifact("indexes/graph_triangle_counts", note,
+        directed = false)(
         graft.operators.Triangles.localCounts(spark, _))
 
     /** [[refreshIfDue]] around [[refreshTriangleCounts]] — the wedge
@@ -1649,7 +1657,8 @@ object Orchestrator {
       */
     def refreshKCore(k: Int = 2, maxRounds: Int = 32,
                      note: String = ""): Long =
-      refreshGraphArtifact("indexes/graph_kcore", note)(
+      refreshGraphArtifact("indexes/graph_kcore", note,
+        directed = false)(
         graft.operators.KCore.peel(spark, _, k, maxRounds))
 
     /** [[refreshIfDue]] around [[refreshKCore]]. */
@@ -1666,7 +1675,8 @@ object Orchestrator {
       * would MISLABEL cores, so it lands FAILED, never a wrong table.
       */
     def refreshCoreNumbers(maxRounds: Int = 64, note: String = ""): Long =
-      refreshGraphArtifact("indexes/graph_core_numbers", note)(
+      refreshGraphArtifact("indexes/graph_core_numbers", note,
+        directed = false)(
         graft.operators.KCore.coreNumbers(spark, _, maxRounds))
 
     /** [[refreshIfDue]] around [[refreshCoreNumbers]]. */
@@ -1684,7 +1694,8 @@ object Orchestrator {
       * guards fire inside the failure scope.
       */
     def refreshLpaCommunities(rounds: Int = 4, note: String = ""): Long =
-      refreshGraphArtifact("indexes/graph_communities", note)(
+      refreshGraphArtifact("indexes/graph_communities", note,
+        directed = false)(
         graft.operators.LabelPropagation.run(spark, _, rounds))
 
     /** [[refreshIfDue]] around [[refreshLpaCommunities]]. */

@@ -1,13 +1,9 @@
 package graft
 
 import graft.operators.{GraphInput, Hits, KCore, LabelPropagation, PageRank, Triangles}
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-
-import java.util.concurrent.atomic.AtomicInteger
 
 /** Spark jobs per graph refresh on the lifecycle's graph: 140 distinct
   * edges `src{i % 20} -> src{i % 7}` over 20 nodes, read from parquet
@@ -26,30 +22,13 @@ class GraphJobCountSpec extends AnyFunSuite with SparkTestBase {
   private def edges: DataFrame =
     spark.read.parquet(edgeDir).select(col("src"), col("dst")).distinct()
 
-  /** Jobs from the call of `build` to its collected result, counted by
-    * a listener on this thread's job group. The input frame is built
-    * before the count (its parquet schema read is the caller's job).
+  /** Jobs from the call of `build` to its collected result. The input
+    * frame is built before the count (its parquet schema read is the
+    * caller's job).
     */
   private def jobs(build: DataFrame => DataFrame): Int = {
     val input = edges
-    val sc = spark.sparkContext
-    val group = s"graph-jobs-${System.nanoTime}"
-    val n = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-          e.properties.getProperty("spark.jobGroup.id") == group)
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "graph job count")
-    try build(input).collect()
-    finally {
-      sc.clearJobGroup()
-      ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get
+    jobsIn(build(input).collect())._2
   }
 
   private val calls: Seq[(String, DataFrame => DataFrame)] = Seq(

@@ -60,6 +60,33 @@ trait SparkTestBase { self: Suite =>
     want
   }
 
+  /** `body`'s result and the Spark jobs it ran, counted by a listener
+    * on this thread's job group; the listener bus is drained before
+    * the count is read.
+    */
+  def jobsIn[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-in-${System.nanoTime}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+          e.properties.getProperty("spark.jobGroup.id") == group)
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    val out =
+      try body
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.ListenerBusDrain(sc)
+        sc.removeSparkListener(listener)
+      }
+    (out, n.get)
+  }
+
   /** True when `df` reads only rows the driver holds (local leaves): a
     * graph operator's result on the driver path.
     */
